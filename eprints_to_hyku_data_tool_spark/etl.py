@@ -1,23 +1,27 @@
 """EPrints -> Hyku (Bulkrax) ETL facade: SURVEY.md §1.1, §2.1 X01-X05.
 
 The reference repo declares exactly this purpose and contains no code
-(/root/reference/README.md:2, SURVEY.md §0); this module is the domain
-pipeline rebuilt Spark-first: nested, multi-valued, stringly-typed EPrints
-records flattened into delimiter-joined Bulkrax CSV rows.
+(SURVEY.md §0); this module is the domain pipeline rebuilt Spark-first:
+nested, multi-valued, stringly-typed EPrints records flattened into
+delimiter-joined Bulkrax CSV rows.
 
 Key semantics (SURVEY §1.1):
 - ORDER PRESERVATION of multi-valued fields: creator order is
-  bibliographic meaning. Arrays keep their JSON/XML order; vocabulary
-  resolution uses posexplode + re-fold sorted by position, never a bare
-  collect_list (nondeterministic order under a shuffle).
+  bibliographic meaning. Arrays keep their JSON/XML order, and every
+  multi-valued column is built by higher-order functions over the
+  record's own array, so no shuffle or aggregation ever reorders it.
+  Subjects resolve in place: each code is looked up in the vocabulary
+  map at its own position, and a code with several labels emits them in
+  ascending label order.
 - Referential integrity: unmapped subject codes are dropped from the
   output row AND surfaced in a separate anti-join report.
 - Type coercion at the edge: EPrints dates arrive as '2019', '2019-05',
   or '2019-05-07' and are normalized to full ISO dates.
 
-Scale posture: the subject vocabulary is a broadcast dim; the only
-shuffle is the posexplode->refold on (eprintid). Everything else is
-row-level expression work inside whole-stage codegen.
+Scale posture: no shuffle on the records. The subject vocabulary is
+folded into a one-row code -> labels map and broadcast onto them, so the
+whole Bulkrax row is one narrow projection, written as Spark SQL text
+the JVM parses in one call.
 """
 
 from __future__ import annotations
@@ -33,19 +37,6 @@ EPRINTS_SCHEMA = (
     "documents array<struct<main:string,format:string,filesize:long,security:string>>"
 )
 
-BULKRAX_COLUMNS = [
-    "source_identifier",
-    "title",
-    "creator",
-    "keyword",
-    "subject",
-    "resource_type",
-    "date_created",
-    "abstract",
-    "official_url",
-    "file",
-]
-
 # EPrints item type -> Hyku resource_type controlled vocabulary
 RESOURCE_TYPE_MAP = {
     "article": "Article",
@@ -55,48 +46,41 @@ RESOURCE_TYPE_MAP = {
     "thesis": "Thesis",
 }
 
+_VOCAB = "_subject_vocab"
 
-def source_identifier(eprintid_col) -> F.Column:
-    """Deterministic Bulkrax source_identifier (Q51 pattern)."""
-    return F.md5(F.concat(F.lit("eprints:"), F.col(eprintid_col).cast("string")))
-
-
-def normalize_date(date_col) -> F.Column:
-    """'2019' -> '2019-01-01', '2019-05' -> '2019-05-01', full ISO kept."""
-    d = F.trim(F.col(date_col))
-    return (
-        F.when(F.length(d) == 4, F.concat(d, F.lit("-01-01")))
-        .when(F.length(d) == 7, F.concat(d, F.lit("-01")))
-        .otherwise(d)
-    )
-
-
-def resolve_subjects(eprints: DataFrame, subject_map: DataFrame) -> DataFrame:
-    """Ordered vocabulary resolution: posexplode subjects, broadcast-join
-    the code->label map, re-fold labels sorted by original position.
-    Unmapped codes drop out (inner join); see unmapped_subjects_report.
-
-    Returns (eprintid, subject) with subject = '|'-joined labels.
-    """
-    exploded = eprints.select(
-        "eprintid", F.posexplode("subjects").alias("pos", "code")
-    )
-    resolved = exploded.join(F.broadcast(subject_map), "code", "inner")
-    refolded = (
-        resolved.groupBy("eprintid")
-        .agg(
-            F.array_join(
-                # refold in original position order: sort (pos, label)
-                # structs, then project the label
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "label"))),
-                    lambda s: s["label"],
-                ),
-                "|",
-            ).alias("subject")
-        )
-    )
-    return refolded
+# One Bulkrax row per eprint; the aliases are the CSV header, in order.
+_BULKRAX_ROW = (
+    # deterministic Bulkrax source_identifier (Q51 pattern)
+    "md5(concat('eprints:', cast(eprintid AS string))) AS source_identifier",
+    r"regexp_replace(trim(title), '\\s+', ' ') AS title",
+    "array_join(transform(coalesce(creators, array()),"
+    " c -> concat_ws(', ', c.family, c.given)), '|') AS creator",
+    # filter(length > 0) after the trim (code-review r15, verified): real
+    # EPrints keyword strings end with trailing semicolons or contain
+    # ';;' — split() keeps the empty segments and array_join would emit
+    # them as blank keyword terms ('k1|k2|'), polluting the Hyku facet.
+    "array_join(filter(transform(split(coalesce(keywords, ''), ';'),"
+    " t -> trim(t)), t -> length(t) > 0), '|') AS keyword",
+    # a null code, or one the vocabulary lacks, looks up null -> no labels
+    f"coalesce(array_join(flatten(transform(subjects,"
+    f" c -> coalesce({_VOCAB}[c], array()))), '|'), '') AS subject",
+    "CASE type "
+    + " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in RESOURCE_TYPE_MAP.items())
+    + " ELSE 'Other' END AS resource_type",
+    # '2019' -> '2019-01-01', '2019-05' -> '2019-05-01', full ISO kept
+    "CASE length(trim(date)) WHEN 4 THEN concat(trim(date), '-01-01')"
+    " WHEN 7 THEN concat(trim(date), '-01') ELSE trim(date) END AS date_created",
+    "coalesce(abstract, '') AS abstract",
+    "coalesce(official_url, '') AS official_url",
+    # EXPLICIT null filter (code-review r15): array_join drops null
+    # elements anyway, but silently — EPrints emits main=null for
+    # placeholder/derived documents, and relying on the join's implicit
+    # skip hid that files can vanish from the row. The filter makes the
+    # semantics deliberate; null_main_documents() is the audit surface
+    # for rows that lost files.
+    "array_join(filter(transform(coalesce(documents, array()), d -> d.main),"
+    " m -> m IS NOT NULL), '|') AS file",
+)
 
 
 def unmapped_subjects_report(eprints: DataFrame, subject_map: DataFrame) -> DataFrame:
@@ -124,67 +108,29 @@ def null_main_documents(eprints: DataFrame) -> DataFrame:
 
 
 def eprints_to_bulkrax(eprints: DataFrame, subject_map: DataFrame) -> DataFrame:
-    """The flagship domain transform: one Bulkrax CSV row per eprint."""
-    resource_type = F.coalesce(
-        *[
-            F.when(F.col("type") == k, F.lit(v))
-            for k, v in RESOURCE_TYPE_MAP.items()
-        ],
-        F.lit("Other"),
+    """The flagship domain transform: one Bulkrax CSV row per eprint.
+
+    ``subject_map`` (code, label) is folded into one row holding a
+    code -> ascending-labels map, grouped by code so the fold stays
+    linear in the vocabulary. The null-code group is left out of the
+    map, as map keys cannot be null. The fold runs in one task: the map
+    is broadcast whole, so it must fit one task anyway, and a single
+    partition already satisfies both aggregations without an exchange.
+    That row is broadcast onto the records, and each record's subjects
+    resolve through it in array order.
+
+    The steps are Spark SQL text, not Column trees built call by call:
+    each py4j round trip costs on the order of a millisecond, and the
+    transform is planned afresh for every import batch."""
+    vocab = (
+        subject_map.coalesce(1)
+        .groupBy("code")
+        .agg(F.expr("array_sort(collect_list(label)) AS labels"))
+        .agg(
+            F.expr(
+                "map_from_entries(collect_list(struct(code, labels))"
+                f" FILTER (WHERE code IS NOT NULL)) AS {_VOCAB}"
+            )
+        )
     )
-    base = eprints.select(
-        "eprintid",
-        source_identifier("eprintid").alias("source_identifier"),
-        F.regexp_replace(F.trim("title"), r"\s+", " ").alias("title"),
-        F.array_join(
-            F.transform(
-                F.coalesce("creators", F.array()),
-                lambda c: F.concat_ws(", ", c["family"], c["given"]),
-            ),
-            "|",
-        ).alias("creator"),
-        F.array_join(
-            # filter(length > 0) after the trim (code-review r15,
-            # verified): real EPrints keyword strings end with trailing
-            # semicolons or contain ';;' — split() keeps the empty
-            # segments and array_join would emit them as blank keyword
-            # terms ('k1|k2|'), polluting the Hyku facet.
-            F.filter(
-                F.transform(
-                    # single-arg lambda: transform's optional second
-                    # (index) argument must not reach trim, which would
-                    # read it as a trim-characters parameter
-                    F.split(F.coalesce("keywords", F.lit("")), ";"),
-                    lambda t: F.trim(t),
-                ),
-                lambda t: F.length(t) > 0,
-            ),
-            "|",
-        ).alias("keyword"),
-        resource_type.alias("resource_type"),
-        normalize_date("date").alias("date_created"),
-        F.coalesce("abstract", F.lit("")).alias("abstract"),
-        F.coalesce("official_url", F.lit("")).alias("official_url"),
-        F.array_join(
-            # EXPLICIT null filter (code-review r15): array_join drops
-            # null elements anyway, but silently — EPrints emits
-            # main=null for placeholder/derived documents, and relying
-            # on the join's implicit skip hid that files can vanish
-            # from the row. The filter makes the semantics deliberate;
-            # null_main_documents() below is the audit surface (the
-            # unmapped-subjects pattern) for rows that lost files.
-            F.filter(
-                F.transform(
-                    F.coalesce("documents", F.array()), lambda d: d["main"]
-                ),
-                lambda m: m.isNotNull(),
-            ),
-            "|",
-        ).alias("file"),
-    )
-    subjects = resolve_subjects(eprints, subject_map)
-    return (
-        base.join(subjects, "eprintid", "left")
-        .withColumn("subject", F.coalesce("subject", F.lit("")))
-        .select(*BULKRAX_COLUMNS)
-    )
+    return eprints.crossJoin(vocab.hint("broadcast")).selectExpr(*_BULKRAX_ROW)

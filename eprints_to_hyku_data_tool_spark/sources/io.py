@@ -319,6 +319,13 @@ def write_bulkrax_csv(
     '|'-joined by the transform layer, header row, one file per import
     batch.
 
+    Whitespace: Spark's CSV writer defaults ignoreLeadingWhiteSpace and
+    ignoreTrailingWhiteSpace stay on, so every value loses its leading
+    and trailing chars <= U+0020 on the way to disk ('  lead' -> 'lead',
+    '\\tTab' -> 'Tab', a trailing newline is dropped); U+00A0 and other
+    non-ASCII spaces survive. The transform's trim strips only U+0020,
+    so a padded abstract differs between the DataFrame and the file.
+
     coalesce-vs-repartition trade, stated (code-review r14): coalesce
     inserts NO shuffle, but that means it collapses the parallelism of
     the entire upstream narrow stage to n_files tasks — with the default

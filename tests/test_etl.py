@@ -70,6 +70,91 @@ def test_unmapped_subjects_report(eprints_df, subject_map_df):
     assert [(r["eprintid"], r["code"]) for r in report] == [(102, "XX9")]
 
 
+def _records(spark, rows):
+    """EPrints records from (eprintid, subjects, abstract) triples, titled
+    by their id so output rows can be told apart."""
+    full = [
+        (i, None, "article", str(i), abstract, "2020", None, None,
+         subjects, None, None, None)
+        for i, subjects, abstract in rows
+    ]
+    return spark.createDataFrame(full, etl.EPRINTS_SCHEMA)
+
+
+def test_subject_resolution_edges(spark):
+    """Each code resolves at its own position; a code with several labels
+    emits them in ascending label order; null, empty and unmapped inputs
+    resolve to nothing."""
+    vocab = spark.createDataFrame(
+        [
+            ("A", "Zoo"),
+            ("A", "Ant"),  # duplicate code: both labels, ascending
+            (None, "Nobody"),  # null code: never matches, even a null
+            ("B", "Bee"),
+            ("C", "Aardvark"),  # label order differs from code order
+        ],
+        "code string, label string",
+    )
+    records = _records(
+        spark,
+        [
+            (1, ["C", "B"], None),
+            (2, ["A"], None),
+            (3, [None, "B"], None),
+            (4, None, None),
+            (5, [], None),
+            (6, ["X", "Y"], None),
+            (7, ["B", "A", "B"], None),
+        ],
+    )
+    got = {
+        r["title"]: r["subject"]
+        for r in etl.eprints_to_bulkrax(records, vocab).collect()
+    }
+    assert got == {
+        "1": "Aardvark|Bee",
+        "2": "Ant|Zoo",
+        "3": "Bee",
+        "4": "",
+        "5": "",
+        "6": "",
+        "7": "Bee|Ant|Zoo|Bee",
+    }
+
+
+def test_bulkrax_plan_is_one_narrow_projection(spark, eprints_df, subject_map_df):
+    """The records never shuffle: no explode, no hash exchange, no
+    shuffled join, and the only broadcast is the vocabulary map."""
+    df = etl.eprints_to_bulkrax(eprints_df, subject_map_df)
+    df.collect()
+    p = df._jdf.queryExecution().executedPlan().toString()
+    p = p.split("== Initial Plan ==")[0]  # AQE: the plan that ran
+    assert "Generate" not in p, p
+    assert "Exchange hashpartitioning" not in p, p
+    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p, p
+    assert p.count("BroadcastExchange") == 1, p
+    broadcast = p.split("BroadcastExchange")[1]
+    assert f"output=[{etl._VOCAB}" in broadcast.splitlines()[1], p
+
+
+def test_bulkrax_sink_strips_c0_whitespace(spark, subject_map_df, tmp_path):
+    """The sink's whitespace contract as it stands: the CSV writer strips
+    leading and trailing chars <= U+0020 from every value, though the
+    transform leaves abstracts untrimmed; U+00A0 is not whitespace to it."""
+    abstracts = ["  lead", "\tTab", "trail\n", "\u00a0nbsp\u00a0"]
+    records = _records(
+        spark, [(i, None, a) for i, a in enumerate(abstracts, start=1)]
+    )
+    rows = etl.eprints_to_bulkrax(records, subject_map_df)
+    assert sorted(r["abstract"] for r in rows.collect()) == sorted(abstracts)
+    out_dir = str(tmp_path / "ws")
+    eio.write_bulkrax_csv(rows, out_dir)
+    (csv_file,) = glob.glob(f"{out_dir}/part-*.csv")
+    with open(csv_file, newline="", encoding="utf-8") as f:
+        got = {r["title"]: r["abstract"] for r in csv.DictReader(f)}
+    assert got == {"1": "lead", "2": "Tab", "3": "trail", "4": "\u00a0nbsp\u00a0"}
+
+
 def test_x01_csv_source(subject_map_df):
     rows = {r["code"]: r["label"] for r in subject_map_df.collect()}
     assert rows["QA76"] == "Computer Science"

@@ -82,8 +82,12 @@ def run_once(query: str, sf_dir: str, cpus: int) -> dict:
         env=env,
         capture_output=True,
         text=True,
-        check=True,
     )
+    if out.returncode != 0:
+        raise RuntimeError(
+            f"sentinel child exited {out.returncode} (cpus={cpus}, "
+            f"query={query}); stderr tail:\n{out.stderr[-4000:]}"
+        )
     for line in out.stdout.splitlines():
         if line.startswith("SENTINEL "):
             return json.loads(line[len("SENTINEL "):])
