@@ -263,11 +263,24 @@ def q9344_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
                       string_split(text,' ')[i+1] || ' ' ||
                       string_split(text,' ')[i+2])) AS sh
       FROM documents),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
+    -- |A n B| per pair from an equi-join on the (distinct) shingles, so
+    -- only pairs sharing a shingle are ever formed; two shingle-less docs
+    -- share none yet meet the bound (0 >= 0), so they are added apart.
+    u AS (SELECT doc_id, unnest(sh) AS s FROM t),
+    shared AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+      FROM u a JOIN u b ON a.s = b.s AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id
+      UNION ALL
+      SELECT a.doc_id, b.doc_id, 0
       FROM t a JOIN t b ON a.doc_id < b.doc_id
-      WHERE 5 * len(list_intersect(a.sh, b.sh))
-            >= 4 * (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))))
+      WHERE len(a.sh) = 0 AND len(b.sh) = 0),
+    pairs AS (
+      SELECT id_a, id_b
+      FROM shared
+      JOIN t a ON a.doc_id = shared.id_a
+      JOIN t b ON b.doc_id = shared.id_b
+      WHERE 5 * inter >= 4 * (len(a.sh) + len(b.sh) - inter))
     SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM split WHERE NOT is_test)
              AS n_train,
            (SELECT CAST(COUNT(*) AS BIGINT) FROM split WHERE is_test)
