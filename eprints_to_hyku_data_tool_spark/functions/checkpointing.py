@@ -7,14 +7,19 @@ is NOT fault-tolerant: blocks die with their executor, and a lost block
 kills every consumer of a shared intermediate or an iteration's whole
 lineage (which the checkpoint deliberately cut).
 
-Setting SPARK_GRAFT_CHECKPOINT_DIR to a fault-tolerant path (HDFS/S3 on
-a cluster; any directory in tests) switches every call site that
-materializes through here — the session memo (functions/memo.py) and
-the iterative kernels (functions/graph.py) — to reliable
-DataFrame.checkpoint into that directory. Same semantics (eager
-materialization, lineage cut), executor-loss-proof storage. The env var
-makes the cluster posture an executable switch rather than a docstring
-claim (tests/test_graph.py runs the graph family under it).
+Setting SPARK_GRAFT_CHECKPOINT_DIR (read only by ``checkpoint_target``)
+to a fault-tolerant path (HDFS/S3 on a cluster; any directory in tests)
+switches every call site that materializes through here to reliable
+DataFrame.checkpoint into that directory: the same lineage cut on
+executor-loss-proof storage. The env var makes the cluster posture an
+executable switch rather than a docstring claim (tests/test_graph.py
+runs the graph family under it).
+
+Eagerness is decided here alone. ``eager=False`` means "lazy is fine on
+the local path", where a lazy localCheckpoint stores its blocks in the
+first job that touches them. A reliable checkpoint is always eager: its
+files are written by a separate job after the first action, which
+recomputes the lineage, so a lazy one would compute its input twice.
 
 Cleanup: localCheckpoint blocks are freed by the ContextCleaner when
 the superseded DataFrames are GC'd. Reliable checkpoint FILES are only
@@ -35,25 +40,24 @@ from pyspark.sql import DataFrame
 _DIR_SET_FOR: dict[str, str] = {}
 
 
-_READ_ENV = object()
+def checkpoint_target() -> str:
+    """The reliable checkpoint directory (SPARK_GRAFT_CHECKPOINT_DIR),
+    or "" for the local path."""
+    return os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR", "")
 
 
 def materialize(
-    df: DataFrame, eager: bool = True, ckpt_dir=_READ_ENV
+    df: DataFrame, eager: bool = True, target: str | None = None
 ) -> DataFrame:
-    """Checkpoint ``df`` eagerly (or lazily), reliable when
-    SPARK_GRAFT_CHECKPOINT_DIR is set, local otherwise.
+    """Checkpoint ``df``: reliable and eager into ``target`` when it is
+    set, local (lazy when ``eager=False``) otherwise.
 
-    ``ckpt_dir`` lets a caller pin the target it already resolved:
-    session_memo keys its cache by the directory it read, and a second
-    env read HERE could disagree if another thread repoints the var
-    between the two reads — the entry would then be served under one
-    target while its files live (and get pruned) under another
-    (code-review r15). Pass the resolved value (or None for local) to
-    make key and files agree by construction."""
-    if ckpt_dir is _READ_ENV:
-        ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if not ckpt_dir:
+    ``target`` defaults to ``checkpoint_target()``. session_memo passes
+    the target it keyed its cache by, so key and files agree even if
+    another thread repoints the env var between the two reads."""
+    if target is None:
+        target = checkpoint_target()
+    if not target:
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
     app = sc.applicationId
@@ -61,7 +65,7 @@ def materialize(
     # that repoints the env var mid-session (test fixtures with per-test
     # tmp dirs) must not keep writing into the first—possibly pruned—
     # directory.
-    if _DIR_SET_FOR.get(app) != ckpt_dir or sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(ckpt_dir)
-        _DIR_SET_FOR[app] = ckpt_dir
-    return df.checkpoint(eager=eager)
+    if _DIR_SET_FOR.get(app) != target or sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(target)
+        _DIR_SET_FOR[app] = target
+    return df.checkpoint(eager=True)

@@ -29,8 +29,6 @@ test.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -134,26 +132,20 @@ def connected_components(
     # fingerprint aggregation the job that computes AND stores the
     # round's blocks — one driver action per round instead of an eager
     # materialize job followed by the agg job, on an iteration whose
-    # per-round cost is mostly stage latency. Reliable checkpoints stay
-    # EAGER: RDD.checkpoint() recomputes the lineage a second time when
-    # writing the checkpoint files unless the data is already persisted,
-    # so a lazy reliable checkpoint would compute every round twice.
-    eager = bool(os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR"))
+    # per-round cost is mostly stage latency (reliable checkpoints stay
+    # eager: functions/checkpointing.py).
     # Materialize the input ONCE: the fingerprint action below and the
     # first round's checkpoint would otherwise each re-evaluate the
     # (possibly expensive) upstream pair pipeline.
-    edges = materialize(edges, eager=eager)
+    edges = materialize(edges, eager=False)
 
     fp = _edge_fingerprint(edges)
     for _ in range(max_rounds):
         edges = _small_star(_large_star(edges)).filter(F.col("u") != F.col("v"))
         # Materialize per round: each star rebuilds on the previous
         # round's output, and without a checkpoint the lineage doubles
-        # every round (2^rounds plan growth). materialize() keeps the
-        # per-round plan flat — localCheckpoint on local[*], reliable
-        # checkpoint() when SPARK_GRAFT_CHECKPOINT_DIR points at a
-        # fault-tolerant store (functions/checkpointing.py).
-        edges = materialize(edges, eager=eager)
+        # every round (2^rounds plan growth).
+        edges = materialize(edges, eager=False)
         new_fp = _edge_fingerprint(edges)
         if new_fp == fp:
             break
@@ -199,15 +191,10 @@ def pagerank(
     promotes the ranks join to a ranks-side broadcast when ranks fits,
     so the per-iteration marginal stays one node-keyed agg shuffle. A
     persist() pin that keeps the partitioning visible was measured
-    4-10x slower (see the in-function adjudication note). localCheckpoint blocks are MEMORY_AND_DISK and are
-    released by Spark's ContextCleaner once the superseded DataFrames
-    are GC'd — DataFrame.unpersist() does NOT free them (it only
-    consults the cache manager), so no manual cleanup is attempted
-    here. Reliable checkpoint FILES (the SPARK_GRAFT_CHECKPOINT_DIR
-    posture) get the same GC-driven lifecycle only because the session
-    factory sets spark.cleaner.referenceTracking.cleanCheckpoints
-    (session.py) — without it every superseded round's O(nodes) file
-    would accumulate for the life of the application.
+    4-10x slower (see the in-function adjudication note). Superseded
+    rounds' checkpoints are freed by the ContextCleaner
+    (functions/checkpointing.py); DataFrame.unpersist() does NOT free
+    them, so no manual cleanup is attempted here.
 
     Round-6 iteration shape: the old per-round ``nodes LEFT JOIN
     contribs`` is folded INTO the contribution aggregation — a static
@@ -234,16 +221,13 @@ def pagerank(
     # Lazy checkpoints here (r16, local path): nodes.count() is the job
     # that computes AND stores edges' and nodes' blocks in one pass —
     # two fewer driver actions than eager materialize + count, same
-    # blocks (a lazy localCheckpoint completes within the first job
-    # that touches the RDD). Reliable checkpoints stay eager: a lazy
-    # reliable checkpoint recomputes lineage when writing files.
-    eager = bool(os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR"))
-    edges = materialize(edges, eager=eager)
+    # blocks (functions/checkpointing.py).
+    edges = materialize(edges, eager=False)
     nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct(),
-        eager=eager,
+        eager=False,
     )
     n = nodes.count()
     if n == 0:
@@ -275,7 +259,7 @@ def pagerank(
     # checkpoint, one fewer driver action.
     dangling_nodes = materialize(
         nodes.join(deg.select(F.col("src").alias("node")), "node", "left_anti"),
-        eager=eager,
+        eager=False,
     )
     has_dangling = bool(dangling_nodes.head(1))
     # Sentinel node id for the dangling-mass pseudo-edges: real node ids
@@ -323,7 +307,7 @@ def pagerank(
     # code path; the checkpoint form stays, permanently.
     # Lazy on the local path (r16): the first iteration's job completes
     # the checkpoint; one fewer eager count pass over the edge table.
-    edges_d = materialize(edges_d.repartition("src"), eager=eager)
+    edges_d = materialize(edges_d.repartition("src"), eager=False)
     # Static zero-contribution rows: unioned under each round's
     # aggregation so every node appears in the result without a second
     # node-keyed join (x + 0.0 == x for non-negative ranks, so the
@@ -387,7 +371,7 @@ def pagerank(
         # node table is skipped per cadence — the consumer's job
         # completes the checkpoint blocks.
         if not has_dangling and (it % 4 == 3 or it == n_iter - 1):
-            ranks = materialize(ranks, eager=eager)
+            ranks = materialize(ranks, eager=False)
     return ranks
 
 

@@ -26,7 +26,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .checkpointing import materialize
+from .checkpointing import checkpoint_target, materialize
 
 _MEMO: dict[tuple[str, str, str, str], DataFrame] = {}
 # One lock guards lookup/evict/insert AND the build itself: two threads
@@ -52,21 +52,19 @@ def session_memo(
     """``eager=False`` lets a build CHAIN defer its intermediate
     materializations to the chain's final (eager) entry: the last
     phase's one job computes the whole chain, storing blocks at every
-    lazy cut, instead of one count pass per phase (r16 — the copurchase
-    und/deg/oriented ladder). Only meaningful on the local path; under
-    SPARK_GRAFT_CHECKPOINT_DIR the materialize stays eager regardless
-    (a lazy reliable checkpoint recomputes lineage on file write), so
-    the flag quietly strengthens to eager there."""
-    import os
-
+    lazy cut, instead of one count pass per phase (the copurchase
+    und/deg/oriented ladder). It is honoured on the local path only
+    (functions/checkpointing.py). ``eager`` is not part of the key: the
+    first builder's value wins for a key, which matters only on the
+    local path, because reliable checkpoints are always eager."""
     app = spark.sparkContext.applicationId
     # The materialization TARGET is part of the identity (code-review
     # r13): repointing SPARK_GRAFT_CHECKPOINT_DIR mid-application (the
     # per-test tmp-dir pattern) must miss, not serve a DataFrame whose
     # reliable-checkpoint files live in the old — possibly pruned —
     # directory.
-    raw_tgt = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    tgt = raw_tgt or "<local>"
+    target = checkpoint_target()
+    tgt = target or "<local>"
     with _LOCK:
         # Evict entries from other (stopped) applications or other
         # checkpoint targets: their DataFrames are unusable (or backed
@@ -81,13 +79,9 @@ def session_memo(
         k = (app, tgt, sf_dir, key)
         df = _MEMO.get(k)
         if df is None:
-            # Pass the SAME resolved target the key records — a second
-            # env read inside materialize() could disagree under a
-            # concurrent repoint, caching an entry whose backing files
-            # live in another (possibly pruned) directory
+            # Materialize into the target the key records, not a second
+            # env read that a concurrent repoint could change
             # (code-review r15).
-            df = materialize(
-                build(), eager=eager or raw_tgt is not None, ckpt_dir=raw_tgt
-            )
+            df = materialize(build(), eager=eager, target=target)
             _MEMO[k] = df
         return df

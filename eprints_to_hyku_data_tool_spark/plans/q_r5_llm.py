@@ -602,9 +602,8 @@ def z117526_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # promotes the frontier join to a frontier-side broadcast when it
     # fits (see functions/graph.py pagerank's measured adjudication of
     # a persist() pin — 4-10x slower locally via the stats-flip it
-    # causes; same verdict applies here). Iterative lineage cuts route
-    # through materialize(): local on local[*], reliable under
-    # SPARK_GRAFT_CHECKPOINT_DIR (functions/checkpointing.py).
+    # causes; same verdict applies here). Lineage cuts go through
+    # functions/checkpointing.py.
     edges = materialize(
         _copurchase_edges(spark, sf_dir).repartition("src"), eager=False
     )

@@ -433,7 +433,7 @@ def test_partition_keys_round_trip_as_strings(spark, tmp_path):
     assert {r["lang"] for r in back.select("lang").collect()} == {"05", "fr"}
 
 
-def test_keyword_and_file_edges(spark, subject_map_df):
+def test_keyword_and_file_edges(spark, subject_map_df, tmp_path):
     """code-review r15 (verified): trailing/double delimiters produced
     empty keyword terms ('k1|k2|'), and a null documents.main silently
     vanished from the file column with no audit surface."""
@@ -458,7 +458,7 @@ def test_keyword_and_file_edges(spark, subject_map_df):
 
     df = eio.read_json(
         spark,
-        _write_tmp_json(rows),
+        _write_tmp_json(tmp_path, rows),
         schema=etl.EPRINTS_SCHEMA,
     )
     out = etl.eprints_to_bulkrax(df, subject_map_df).collect()[0]
@@ -468,13 +468,9 @@ def test_keyword_and_file_edges(spark, subject_map_df):
     assert [(r["eprintid"], r["pos"]) for r in rep] == [(9001, 0)]
 
 
-def _write_tmp_json(rows):
+def _write_tmp_json(tmp_path, rows):
     import json as _json
-    import tempfile
 
-    f = tempfile.NamedTemporaryFile(
-        "w", suffix=".json", delete=False, dir=tempfile.gettempdir()
-    )
-    _json.dump(rows, f)
-    f.close()
-    return f.name
+    path = tmp_path / "rows.json"
+    path.write_text(_json.dumps(rows))
+    return str(path)

@@ -314,10 +314,13 @@ def test_reliable_checkpoint_switch(spark, sf_dir, tmp_path, monkeypatch):
     """SPARK_GRAFT_CHECKPOINT_DIR switches the memo/iteration
     materializer from localCheckpoint to reliable DataFrame.checkpoint
     — the cluster fault-tolerance posture as an executable switch, not
-    a docstring claim. Run a PageRank (iterative, checkpoints inside
-    the loop) under the switch: results must be bit-identical to the
-    local-checkpoint run and the checkpoint files must actually land in
-    the directory."""
+    a docstring claim. Run PageRank and connected components (iterative,
+    checkpoints inside the loop) under the switch, repointing the dir
+    after every checkpoint: results must be bit-identical to the
+    local-checkpoint run, every checkpoint must be reliable AND eager
+    (a lazy reliable checkpoint recomputes its lineage:
+    functions/checkpointing.py), and the checkpoint files must actually
+    land in the directories."""
     import os
 
     from eprints_to_hyku_data_tool_spark.functions.graph import pagerank
@@ -325,15 +328,77 @@ def test_reliable_checkpoint_switch(spark, sf_dir, tmp_path, monkeypatch):
     edges = spark.createDataFrame(
         [(0, 1), (0, 2), (1, 2), (2, 0), (3, 0)], ["src", "dst"]
     )
-    base = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()}
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
+    )
 
-    ckpt = str(tmp_path / "reliable_ckpt")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckpt)
-    got = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()}
+    def run():
+        ranks = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()}
+        comps = {
+            r["node"]: r["component"]
+            for r in connected_components(pairs).collect()
+        }
+        return ranks, comps
+
+    base = run()
+
+    frame = type(edges)
+    real_checkpoint = frame.checkpoint
+    eagers, local_calls = [], []
+
+    def recording_checkpoint(self, eager=True):
+        eagers.append(eager)
+        out = real_checkpoint(self, eager)
+        monkeypatch.setenv(
+            "SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / f"ckpt{len(eagers)}")
+        )
+        return out
+
+    monkeypatch.setattr(frame, "checkpoint", recording_checkpoint)
+    monkeypatch.setattr(
+        frame, "localCheckpoint", lambda self, *a, **k: local_calls.append(1)
+    )
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt0"))
+    got = run()
     assert got == base  # identical FP sequence either way
+    assert local_calls == []
+    assert len(eagers) > 2 and all(eagers), eagers
     # the reliable store was actually written
-    found = any(files for _, _, files in os.walk(ckpt))
-    assert found, f"no checkpoint files under {ckpt}"
+    found = any(files for _, _, files in os.walk(tmp_path))
+    assert found, f"no checkpoint files under {tmp_path}"
+
+
+def test_reliable_materialize_computes_input_once(spark, tmp_path, monkeypatch):
+    """materialize(df, eager=False) under SPARK_GRAFT_CHECKPOINT_DIR
+    must checkpoint eagerly: a lazy reliable checkpoint writes its files
+    in a second job that recomputes the lineage, so two actions would
+    evaluate every upstream row twice. A counting UDF upstream must run
+    once per row, as it does on the local path."""
+    from eprints_to_hyku_data_tool_spark.functions.checkpointing import (
+        materialize,
+    )
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        calls.add(1)
+        return x
+
+    tick_udf = F.udf(tick, "long")
+
+    def evaluations():
+        calls.value = 0
+        df = materialize(
+            spark.range(1000).select(tick_udf("id").alias("id")), eager=False
+        )
+        assert df.count() == 1000
+        assert len(df.collect()) == 1000
+        return calls.value
+
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    assert evaluations() == 1000
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    assert evaluations() == 1000
 
 
 def test_pagerank_empty_graph(spark):

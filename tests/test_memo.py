@@ -135,18 +135,25 @@ def test_repointed_checkpoint_dir_misses(monkeypatch):
     """code-review r13: the memo key carries the materialization target
     — repointing SPARK_GRAFT_CHECKPOINT_DIR mid-application must
     rebuild, not serve a frame backed by the old (possibly pruned)
-    directory."""
-    _with_identity_materialize(monkeypatch)
+    directory. The build is materialized into the target the key
+    records, with the caller's ``eager`` passed through unchanged
+    (materialize alone makes reliable checkpoints eager)."""
     memo_mod._MEMO.clear()
     spark = _fake_spark("app-ckpt")
-    calls = []
+    calls, materialized = [], []
+
+    def fake_materialize(df, **kw):
+        materialized.append(kw)
+        return df
+
+    monkeypatch.setattr(memo_mod, "materialize", fake_materialize)
 
     def build():
         calls.append(1)
         return object()
 
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/ckpt-a")
-    a1 = memo_mod.session_memo(spark, "sf", "k", build)
+    a1 = memo_mod.session_memo(spark, "sf", "k", build, eager=False)
     a2 = memo_mod.session_memo(spark, "sf", "k", build)
     assert a1 is a2 and len(calls) == 1
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/ckpt-b")
@@ -154,3 +161,12 @@ def test_repointed_checkpoint_dir_misses(monkeypatch):
     assert b1 is not a1 and len(calls) == 2
     # and the old-target entry was evicted, not pinned
     assert all(k[1] == "/tmp/ckpt-b" for k in memo_mod._MEMO)
+    assert materialized == [
+        {"eager": False, "target": "/tmp/ckpt-a"},
+        {"eager": True, "target": "/tmp/ckpt-b"},
+    ]
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
+    memo_mod.session_memo(spark, "sf", "k", build, eager=False)
+    assert materialized[-1] == {"eager": False, "target": ""}
+    assert set(memo_mod._MEMO) == {("app-ckpt", "<local>", "sf", "k")}
+    memo_mod._MEMO.clear()

@@ -1,5 +1,6 @@
 """Whole-registry plan census (same format as
-plans/r15/plan_audit_before.json) + a diff against that r15 census.
+plans/r15/plan_audit_before.json) + a diff against that r15 census,
+made only when --sf-dir is the census's own tier (sf0.1).
 
 Run:  python tools/plan_census.py --sf-dir <tpch-shaped parquet dir> \
           [--out plans/r16/plan_audit_close.json]
@@ -11,6 +12,8 @@ import re
 import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# The tier (fixture directory name) plans/r15/plan_audit_before.json was taken at.
+_BASELINE_TIER = "sf0.1"
 
 
 def census(spark, sf: str) -> dict:
@@ -66,12 +69,18 @@ def main() -> None:
         json.dump(out, fh, indent=0, sort_keys=True)
         fh.write("\n")
 
-    with open(os.path.join(_ROOT, "plans/r15/plan_audit_before.json")) as fh:
-        old = json.load(fh)
     cart = [n for n, v in out.items() if v.get("cartesian")]
     dup = [n for n, v in out.items() if v.get("dup_udf")]
     errs = [n for n, v in out.items() if "error" in v]
     print("queries:", len(out), "cartesians:", cart, "dup_udfs:", dup, "errors:", errs)
+    # Plan shapes depend on table sizes (AQE broadcast thresholds), so a
+    # diff against a census of another tier reports the scale, not the plans.
+    tier = os.path.basename(os.path.normpath(args.sf_dir))
+    if tier != _BASELINE_TIER:
+        print(f"diff skipped: the r15 census is at {_BASELINE_TIER}, this run at {tier}")
+        return
+    with open(os.path.join(_ROOT, "plans/r15/plan_audit_before.json")) as fh:
+        old = json.load(fh)
     moved = []
     for n, v in out.items():
         o = old.get(n)
