@@ -14,7 +14,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -23,8 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # gate can never masquerade as a clean one.
 GATE_NOTES: list[str] = []
 
-from eprints_to_hyku_data_tool_spark.plans.registry import REGISTRY, _load_all
-from eprints_to_hyku_data_tool_spark.session import get_spark, warm_session
+from eprints_to_hyku_data_tool_spark.plans.registry import REGISTRY
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+import measure  # noqa: E402
 
 
 def main() -> None:
@@ -41,17 +42,6 @@ def main() -> None:
     except ValueError:
         pass
 
-    spark = get_spark(app_name="bench", driver_memory="48g")
-    _load_all()
-
-    # Warm the JVM, parquet footers, every column of every table, and
-    # the Arrow python workers — the ONE shared recipe
-    # (session.warm_session; the adjudicator's fresh sessions use the
-    # same helper, so its verdicts compare like-warmed runs). Per-query
-    # numbers then measure the engine in steady state, not whichever
-    # query happens to sort first onto a cold column or a cold
-    # python-worker pool (the q59 "regression" flagged when round 3
-    # re-sorted the registry was exactly this).
     timings: dict[str, float] = {}
     failed: list[str] = []
 
@@ -64,92 +54,35 @@ def main() -> None:
         print(f"BENCH WARMUP ERROR {stage}: {exc}", file=sys.stderr)
         failed.append(f"_warmup_{stage}")
 
-    warm_session(spark, sf_dir, on_error=_warm_error)
+    # Warm the JVM, parquet footers, every column of every table, and
+    # the Arrow python workers with the harness's one session recipe
+    # (tools/measure.py; the adjudicator's fresh sessions use the same
+    # one, so its verdicts compare like-warmed runs). Per-query numbers
+    # then measure the engine in steady state, not whichever query
+    # happens to sort first onto a cold column or a cold python-worker
+    # pool (the q59 "regression" flagged when round 3 re-sorted the
+    # registry was exactly this).
+    spark = measure.open_session(sf_dir, "bench", on_error=_warm_error)
 
-    # Periodic GC between queries: localCheckpoint blocks are released
-    # by the ContextCleaner only after the JVM-side RDD objects become
-    # unreachable, which needs BOTH a python GC (drops the py4j refs)
-    # and a JVM GC. Over 200+ queries the un-collected blocks age the
-    # session (block-manager bloat + heap pressure) — the suite-order
-    # contention documented in BASELINE.md. Collect every N queries;
-    # the GC pause is measured OUTSIDE any query's timing window.
-    try:
-        gc_every = int(os.environ.get("SPARK_GRAFT_BENCH_GC", "24") or 0)
-    except ValueError:
-        # A malformed value must not kill the run before any output
-        # (code-review r14) — fall back to the default, loudly.
-        print("BENCH: ignoring malformed SPARK_GRAFT_BENCH_GC", file=sys.stderr)
-        gc_every = 24
-
-    def _collect_garbage():
-        import gc as _gc
-
-        _gc.collect()
+    # The session-memoized shared intermediates (measure.BUILDS) come
+    # first, as explicit, separately-timed entries. Without this the
+    # one-time build cost lands inside whichever family query happens
+    # to sort first — and worse, if that query is re-run by the suspect
+    # loop below, min() records its memo-WARM time and the build cost
+    # silently vanishes from the suite total (code-review r6). With it,
+    # every family query's number is a stable marginal cost and the
+    # build stays visible in `value`. Every entry is timed by
+    # measure.time_entry, which drops the previous entry's ordering
+    # pins first: a later query sharing a pinned sort subtree would
+    # otherwise read the cache and under-record its standalone cost.
+    for i, name in enumerate([*measure.BUILDS, *sorted(REGISTRY)]):
+        measure.maybe_collect(spark, i)
         try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-
-    # Pre-pay the session-memoized shared intermediates (co-purchase
-    # graph, near-dup pair graph) as explicit, separately-timed entries.
-    # Without this the one-time build cost lands inside whichever family
-    # query happens to sort first — and worse, if that query is re-run
-    # by the suspect loop below, min() records its memo-WARM time and
-    # the build cost silently vanishes from the suite total
-    # (code-review r6). With it, every family query's number is a
-    # stable marginal cost and the build stays visible in `value`.
-    # Names start with '_' so they can never collide with the driver's
-    # [qxyz]-pattern query names.
-    from eprints_to_hyku_data_tool_spark.functions import (
-        copurchase,
-        grams,
-        neardup,
-        ordering,
-    )
-
-    shared_builds = {
-        "_build_copurchase_graph": lambda: (
-            copurchase.triangle_node_stats(spark, sf_dir),  # builds und/deg/oriented too
-        ),
-        "_build_neardup_pairs": lambda: (
-            neardup.components(spark, sf_dir),  # builds verified_pairs too
-        ),
-        "_build_doc_grams": lambda: (grams.doc_grams8(spark, sf_dir),),
-    }
-    for name, build in shared_builds.items():
-        t0 = time.perf_counter()
-        try:
-            build()
-            timings[name] = round(time.perf_counter() - t0, 3)
+            timings[name] = measure.time_entry(spark, name, sf_dir)
         except Exception as exc:  # pragma: no cover
             print(f"BENCH ERROR {name}: {exc}", file=sys.stderr)
             timings[name] = -1.0
-            failed.append(name)
-
-    for i, (name, spec) in enumerate(sorted(REGISTRY.items())):
-        if gc_every and i and i % gc_every == 0:
-            _collect_garbage()
-        # Drop the previous query's ordering pins (persisted sorted
-        # subplans — functions/ordering.py lifecycle): the CacheManager
-        # matches EQUAL plans, so a later query sharing a pinned sort
-        # subtree would read the cache and under-record its standalone
-        # cost, breaking comparability with the pre-pin bench series
-        # (and with the memo accounting, where only _build_* entries
-        # are shared). Safe here: the previous query is fully
-        # materialized to the noop sink.
-        ordering.release_pins()
-        t0 = time.perf_counter()
-        try:
-            df = spec.fn(spark, sf_dir)
-            if df.isStreaming:
-                timings[name] = -1.0
-                failed.append(name)
-                continue
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # pragma: no cover
-            print(f"BENCH ERROR {name}: {exc}", file=sys.stderr)
-            timings[name] = -1.0
+        if timings[name] < 0:
             failed.append(name)
 
     # One timing pass is noisy (cold codegen paths, OS jitter, and
@@ -175,32 +108,18 @@ def main() -> None:
         if not suspects:
             break
         for name in suspects:
-            spec = REGISTRY[name]
-            # A suspect re-run against a live ordering pin would time a
-            # cache READ, not the sort — min() would then mask a real
-            # kernel regression with a number measuring nothing.
-            ordering.release_pins()
-            t0 = time.perf_counter()
+            # time_entry releases the pins first: a re-run against a live
+            # pin would time a cache READ, and min() would then mask a
+            # real kernel regression with a number measuring nothing.
             try:
-                spec.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
                 timings[name] = min(
-                    timings[name], round(time.perf_counter() - t0, 3)
+                    timings[name], measure.time_entry(spark, name, sf_dir)
                 )
             except Exception:  # pragma: no cover
                 pass
 
-    # The `_build_*` entries are first-in-suite one-time builds — the
-    # single most contention-exposed timings in the whole run, and the
-    # source of every recent ambient regression flag (copurchase x2,
-    # neardup x1 — all machine-refuted warm). The in-session suspect
-    # loop above can't touch them (a memo-warm re-run records ~0 s), so
-    # any build that WOULD be flagged vs the previous round gets one
-    # fresh-subprocess warm-standalone run (the adjudicator's own build
-    # runner) at record time, and the min is recorded — a real build
-    # regression survives the fresh session, an ambient artifact does
-    # not, and nobody has to adjudicate post-hoc (VERDICT r9 item 3).
+    # The suspect loop cannot re-time a `_build_*` entry (its memo makes
+    # a re-run ~0 s); flagged builds get a fresh session instead.
     warm_rerun_flagged_builds(timings, sf, sf_dir)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
@@ -325,8 +244,8 @@ def warm_rerun_flagged_builds(
     machine-refuted warm). The in-session suspect loop can't touch them
     (a memo-warm re-run records ~0 s), so any build that would be
     flagged vs the previous round gets one fresh-subprocess
-    warm-standalone run (the adjudicator's own per-run-fresh-session
-    build runner) at record time, and the min is recorded — a real
+    warm-standalone run (`measure.run_fresh`, the adjudicator's own
+    per-run-fresh-session runner) at record time, and the min is recorded — a real
     build regression survives the fresh session, an ambient artifact
     does not, and nobody adjudicates post-hoc (VERDICT r9 item 3).
     """
@@ -338,16 +257,7 @@ def warm_rerun_flagged_builds(
     if not build_flags:
         return []
     try:
-        if runner is None:
-            sys.path.insert(
-                0,
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)), "tools"
-                ),
-            )
-            from adjudicate import run_build_sessions as runner
-
-        warm = runner(build_flags, sf_dir, 1)
+        warm = (runner or measure.run_fresh)(build_flags, sf_dir, 1)
         for n, ts in warm.items():
             print(
                 f"BENCH build warm-standalone {n}: in-suite "

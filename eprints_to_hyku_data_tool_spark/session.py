@@ -107,25 +107,15 @@ def get_spark(
             str(4 * int(shuffle_parts)),
         )
     # r16 cluster-config adjudication at the 10x tier (VERDICT r15 item
-    # 6), interleaved min-of-3 per candidate:
-    # - preferSortMergeJoin=false: ADOPTED as an executable switch —
-    #   association_rules 4.83 -> 3.88 s (won all 3 interleaved pairs),
-    #   multikey_sort/corpus_pipeline flat. Guide §3.1/§9: shuffled hash
-    #   join beats sort-merge when the per-partition build side fits.
-    #   Default stays Spark's (true) so local plan pins and the bench
-    #   series stay comparable; set SPARK_GRAFT_PREFER_SMJ=false on a
-    #   cluster (or for A/Bs).
+    # 6), interleaved min-of-3 per candidate; Spark's defaults stay, so
+    # local plan pins and the bench series stay comparable:
+    # - preferSortMergeJoin=false: association_rules 4.83 -> 3.88 s (won
+    #   all 3 pairs), multikey_sort/corpus_pipeline flat. Set it on a
+    #   cluster through extra_conf or --conf.
     # - coalescePartitions.parallelismFirst=false: REJECTED —
-    #   association_rules 5.75 -> 19.2 s, corpus_pipeline 4.0 -> 28.1 s
-    #   (the 64 MB advisory collapses this tier's parallelism).
+    #   association_rules 5.75 -> 19.2 s, corpus_pipeline 4.0 -> 28.1 s.
     # - io.compression.codec=zstd: REJECTED — corpus_pipeline 5.9 ->
-    #   8.0 s in fresh-session pairs, association_rules tie; pure CPU
-    #   cost where shuffle I/O is local disk, no network to save.
-    prefer_smj = os.environ.get("SPARK_GRAFT_PREFER_SMJ")
-    if prefer_smj is not None:
-        builder = builder.config(
-            "spark.sql.join.preferSortMergeJoin", prefer_smj
-        )
+    #   8.0 s, association_rules tie.
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -161,12 +151,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Same executable cluster switch as get_spark (see the adjudication
-    # note there); runtime-settable, so it applies to driver-owned
-    # sessions too.
-    prefer_smj = os.environ.get("SPARK_GRAFT_PREFER_SMJ")
-    if prefer_smj is not None:
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", prefer_smj)
     try:
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     except Exception:
@@ -187,7 +171,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
 def warm_session(spark: SparkSession, sf_dir: str, on_error=None) -> None:
     """The ONE warm-up recipe every measurement entry point shares
-    (bench.py and both of tools/adjudicate.py's fresh-session runners —
+    (`open_session` in tools/measure.py, which bench.py and every
+    measurement subcommand use, and etlbench/run.py's set-up —
     code-review r14: three hand-kept copies had already diverged once,
     and the adjudicator's verdicts assume its sessions are warmed
     EXACTLY like bench's): scan every table once through a noop sink

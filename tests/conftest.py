@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 import time
@@ -60,3 +62,40 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+def plan_text(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark, sf_dir):
+    """Every registered query built ONCE at the test tier, for the
+    fleet-wide plan tests: {name: {"collects": [rows per construction-
+    time collect], "schema": output schema, "plan": formatted plan}}.
+    The collect spy is active only while each query is built."""
+    from pyspark.sql import DataFrame
+
+    from eprints_to_hyku_data_tool_spark.plans.registry import REGISTRY, _load_all
+
+    _load_all()
+    real_collect = DataFrame.collect
+    out = {}
+    for name, spec in sorted(REGISTRY.items()):
+        calls: list[int] = []
+
+        def spy(self, calls=calls):
+            rows = real_collect(self)
+            calls.append(len(rows))
+            return rows
+
+        DataFrame.collect = spy
+        try:
+            df = spec.fn(spark, sf_dir)  # plan construction only
+        finally:
+            DataFrame.collect = real_collect
+        out[name] = {"collects": calls, "schema": df.schema, "plan": plan_text(df)}
+    return out

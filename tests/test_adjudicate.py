@@ -1,8 +1,9 @@
-"""tools/adjudicate.py — the mechanical bench-flag adjudicator
+"""`tools/measure.py adjudicate` — the mechanical bench-flag adjudicator
 (VERDICT r8 item 4). Unit-tests the verdict thresholds and payload
-shapes, plus one real end-to-end run: a fabricated sidecar flags a
-cheap query, the tool spins a genuinely fresh session at sf0.001,
-re-runs it, and writes machine verdicts back into the sidecar."""
+shapes and the fresh-session routing, plus one real end-to-end run: a
+fabricated sidecar flags a cheap query, the tool spins a genuinely
+fresh session at sf0.001, re-runs it, and writes machine verdicts back
+into the sidecar."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ import pytest
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(_ROOT, "tools"))
 
-from adjudicate import (  # noqa: E402
+from measure import (  # noqa: E402
     adjudicate,
     append_baseline_rows,
     classify,
@@ -57,7 +58,7 @@ def test_adjudicate_maps_flags_to_verdicts():
 
 
 def test_append_baseline_rows_creates_section(tmp_path, monkeypatch):
-    import adjudicate as mod
+    import measure as mod
 
     monkeypatch.setattr(mod, "_ROOT", str(tmp_path))
     (tmp_path / "BASELINE.md").write_text("# BASELINE\n")
@@ -85,7 +86,7 @@ def test_append_baseline_rows_inserts_inside_table(tmp_path, monkeypatch):
     """Rows must land at the end of the adjudication TABLE, not at
     end-of-file: a section written below 'Machine adjudications' would
     otherwise swallow every later verdict row (code review r9)."""
-    import adjudicate as mod
+    import measure as mod
 
     monkeypatch.setattr(mod, "_ROOT", str(tmp_path))
     (tmp_path / "BASELINE.md").write_text("# BASELINE\n")
@@ -112,7 +113,7 @@ def test_append_baseline_rows_ignores_later_tables(tmp_path, monkeypatch):
     capture new verdict rows — the scan stops at the end of the first
     contiguous '|' run after the header, never at the global last '|'
     line (code review r10)."""
-    import adjudicate as mod
+    import measure as mod
 
     monkeypatch.setattr(mod, "_ROOT", str(tmp_path))
     (tmp_path / "BASELINE.md").write_text("# BASELINE\n")
@@ -157,7 +158,8 @@ def test_end_to_end_fresh_session(tmp_path):
     proc = subprocess.run(
         [
             sys.executable,
-            os.path.join(_ROOT, "tools", "adjudicate.py"),
+            os.path.join(_ROOT, "tools", "measure.py"),
+            "adjudicate",
             "--bench",
             str(side),
             "--sf-dir",
@@ -180,53 +182,27 @@ def test_end_to_end_fresh_session(tmp_path):
 def test_build_entries_use_per_run_fresh_sessions(monkeypatch):
     """Round-9 extension, found on the tool's FIRST live flag
     (_build_copurchase_graph): bench's `_build_*` shared-intermediate
-    entries are session-memoized, so the query runner's in-session
-    re-runs would time the memo (~0 s) and auto-refute ANY build flag.
-    The tool must route `_build_*` names to the per-run fresh-session
-    runner and everything else to the query runner."""
-    import adjudicate as mod
+    entries are session-memoized, so in-session re-runs would time the
+    memo (~0 s) and auto-refute ANY build flag. The fresh runner must
+    give every run of a `_build_*` name a child session of its own, and
+    time the queries together in one child."""
+    import measure as mod
 
-    calls = {}
+    calls = []
 
-    def fake_query_runner(names, sf_dir, runs):
-        calls["query"] = names
-        return {n: [0.5] * runs for n in names}
+    def fake_spawn(names, sf_dir, runs, cpus=None):
+        calls.append((names, runs))
+        t = 7.4 if names[0].startswith("_build_") else 0.5
+        return {"times": {n: [t] * runs for n in names}}
 
-    def fake_build_runner(names, sf_dir, runs):
-        calls["build"] = names
-        return {n: [7.4] * runs for n in names}
-
-    monkeypatch.setattr(mod, "run_fresh_session", fake_query_runner)
-    monkeypatch.setattr(mod, "run_build_sessions", fake_build_runner)
+    monkeypatch.setattr(mod, "_spawn", fake_spawn)
 
     regs = {
         "_build_copurchase_graph": {"prev": 8.2, "now": 16.7},
         "q90_x": {"prev": 0.5, "now": 2.0},
     }
-    build_names = sorted(n for n in regs if n.startswith("_build_"))
-    query_names = sorted(n for n in regs if not n.startswith("_build_"))
-    warm = {}
-    warm.update(mod.run_fresh_session(query_names, "sf", 3))
-    warm.update(mod.run_build_sessions(build_names, "sf", 3))
-    out = mod.adjudicate(regs, warm)
-    assert calls == {
-        "query": ["q90_x"],
-        "build": ["_build_copurchase_graph"],
-    }
+    out = mod.adjudicate(regs, mod.run_fresh(sorted(regs), "sf", 3))
+    assert calls == [(["q90_x"], 3)] + [(["_build_copurchase_graph"], 1)] * 3
+    assert out["_build_copurchase_graph"]["warm_runs"] == [7.4] * 3
     assert out["_build_copurchase_graph"]["verdict"] == "refuted"
     assert out["q90_x"]["verdict"] == "refuted"
-
-
-def test_build_runner_template_names_every_bench_build():
-    """The _BUILD_RUNNER subprocess template must know every _build_*
-    name bench.py can emit — a new shared build added to bench without
-    a runner entry would crash adjudication on its first flag."""
-    import re
-
-    import adjudicate as mod
-
-    bench_src = open(os.path.join(_ROOT, "bench.py")).read()
-    bench_builds = set(re.findall(r'"(_build_\w+)"', bench_src))
-    assert bench_builds  # the two shared builds exist
-    for name in bench_builds:
-        assert f'"{name}"' in mod._BUILD_RUNNER, name

@@ -59,24 +59,19 @@ def test_demoted_brute_jaccard_matches_oracle(spark, sf_dir, duck):
     )
 
 
-def test_no_unhashable_output_columns(spark):
+def test_no_unhashable_output_columns(registry_plans):
     """The driver's hasher canonicalizes Decimal differently per engine
     (r2's red row) and its pandas lexsort cannot factorize array cells
     (r3's red row, q73): no registered query may emit a DecimalType,
     ArrayType, MapType, or StructType column — serialize complex values
-    (concat_ws / to_json) before returning. Schema-only check — builds
-    every plan at sf0.001, executes nothing."""
+    (concat_ws / to_json) before returning. Schema-only check on the
+    registry built once at the test tier, executes nothing."""
     from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
 
     banned = (DecimalType, ArrayType, MapType, StructType)
     offenders = {}
-    from .conftest import SF_DIR
-
-    for name, spec in REGISTRY.items():
-        # honor the SPARK_GRAFT_TEST_SF override like every other test
-        # (schema-only: the tier's contents are irrelevant)
-        schema = spec.fn(spark, SF_DIR).schema
-        bad = [f.name for f in schema.fields if isinstance(f.dataType, banned)]
+    for name, built in registry_plans.items():
+        bad = [f.name for f in built["schema"].fields if isinstance(f.dataType, banned)]
         if bad:
             offenders[name] = bad
     assert not offenders, f"unhashable output columns: {offenders}"

@@ -11,14 +11,9 @@ import pytest
 
 from eprints_to_hyku_data_tool_spark.plans.registry import REGISTRY, _load_all
 
+from .conftest import plan_text
+
 _load_all()
-
-
-def plan_text(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 @pytest.fixture(scope="module")
@@ -313,35 +308,22 @@ def test_q68_salted_exchange_partitions_on_salt(plans):
 COLLECT_BUDGET_ROWS = 256
 
 
-def test_no_unbounded_construction_collects(spark, sf_dir, monkeypatch):
-    from pyspark.sql import DataFrame
-
-    calls: list[int] = []
-    real_collect = DataFrame.collect
-
-    def spy(self):
-        rows = real_collect(self)
-        calls.append(len(rows))
-        return rows
-
-    monkeypatch.setattr(DataFrame, "collect", spy)
+def test_no_unbounded_construction_collects(registry_plans):
     offenders = {}
-    for name, spec in sorted(REGISTRY.items()):
-        calls.clear()
-        spec.fn(spark, sf_dir)  # plan construction only — nothing executed
-        too_big = [c for c in calls if c > COLLECT_BUDGET_ROWS]
+    for name, built in registry_plans.items():
+        too_big = [c for c in built["collects"] if c > COLLECT_BUDGET_ROWS]
         if too_big:
             offenders[name] = too_big
     assert not offenders, f"unbounded construction-time collects: {offenders}"
 
 
-def test_fleet_wide_plan_lint(spark, sf_dir):
+def test_fleet_wide_plan_lint(registry_plans):
     """Every registered query's physical plan is free of scale
     anti-patterns: no cartesian products, no nested-loop joins outside
     the whitelist, no row-at-a-time python UDFs."""
     offenders = {}
-    for name, spec in sorted(REGISTRY.items()):
-        p = plan_text(spec.fn(spark, sf_dir))
+    for name, built in registry_plans.items():
+        p = built["plan"]
         problems = []
         if "CartesianProduct" in p:
             problems.append("CartesianProduct")

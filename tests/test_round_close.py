@@ -38,7 +38,7 @@ def test_docs_check_flags_future_round():
 def test_smoke_gated_paths_cover_kernels_and_tools():
     paths = smoke_gated_paths()
     assert any(p.endswith("functions") for p in paths)
-    assert "tools/scale_smoke.py" in paths
+    assert "tools/measure.py" in paths
     assert any(p.endswith("q_embed.py") for p in paths), (
         "the RP-LSH module (the r7 smoke-vs-artifact drift) must be gated"
     )
@@ -224,24 +224,22 @@ def test_rotation_planner_rejects_non_injective_map(monkeypatch, tmp_path):
         rp.load_rename_inverses()
 
 
-def test_scale_smoke_requires_matching_tier_manifest(monkeypatch, tmp_path):
-    """code-review r15: the smoke's linear bound is 2x --copies, so a
-    stale tier built with fewer copies made the gate vacuous. The smoke
-    must refuse to run without a manifest, and refuse a copies
-    mismatch — both before any Spark work."""
+def test_scale_smoke_requires_matching_tier_manifest(tmp_path):
+    """code-review r15: the scale gate's linear bound is 2x --copies, so
+    a stale tier built with fewer copies made the gate vacuous.
+    `measure.py scale` must refuse to run without a manifest, and refuse
+    a copies mismatch — both before any Spark work."""
     import json as _json
 
-    import scale_smoke as sm
+    import measure
 
     tier = tmp_path / "tier"
     tier.mkdir()
-    monkeypatch.setattr(
-        "sys.argv", ["scale_smoke.py", "--tier", str(tier), "--copies", "10"]
-    )
+    argv = ["scale", "--tier", str(tier), "--copies", "10"]
     with pytest.raises(SystemExit, match="tier_manifest"):
-        sm.main()
+        measure.main(argv)
     (tier / "tier_manifest.json").write_text(
         _json.dumps({"copies": 3, "src": "x", "rows": {}})
     )
     with pytest.raises(SystemExit, match="copies=3"):
-        sm.main()
+        measure.main(argv)

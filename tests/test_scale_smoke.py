@@ -7,8 +7,9 @@ fixtures are too small to break.
 Heavy by construction (tier generation + two full tier runs), so gated
 behind SPARK_GRAFT_SCALE_SMOKE=1 like the sf0.1 full sweep; the default
 suite stays fast. The committed SCALE_SMOKE.json records the full
-10-copy run of tools/scale_smoke.py; this test reproduces the
-methodology at 3 copies so it finishes in minutes.
+10-copy run of `tools/measure.py scale`; this test times through the
+same harness and judges with its gate at 3 copies, so it finishes in
+minutes.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ pytestmark = pytest.mark.skipif(
 )
 
 COPIES = 3
-# Subset of tools/scale_smoke.py's HEAVY list: one representative per
+# Subset of tools/measure.py's HEAVY list: one representative per
 # scale-sensitive family (graph build+iteration, LSH banding, sketch
 # aggs, PPJoin, winnowing) keeps the opt-in run in minutes.
 HEAVY = [
@@ -40,31 +41,20 @@ HEAVY = [
 
 
 def test_heavy_queries_scale_data_linearly(spark, tmp_path_factory):
-    import time
-
-    from tools.make_scale_tier import build_tier
-    from tools.scale_smoke import _run_tier
+    import measure
+    from make_scale_tier import build_tier
 
     base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     tier = str(tmp_path_factory.mktemp("scale") / "tier")
     build_tier(spark, base, tier, COPIES)
 
-    import tools.scale_smoke as sm
-
-    saved = sm.HEAVY
-    sm.HEAVY = HEAVY
-    try:
-        t_base = _run_tier(spark, base)
-        t_big = _run_tier(spark, tier)
-    finally:
-        sm.HEAVY = saved
-
+    names = [*measure.BUILDS, *HEAVY]
+    t_base = measure.time_runs(spark, names, base)
+    t_big = measure.time_runs(spark, names, tier)
     bound = 2.0 * COPIES
     bad = {
-        n: round(t_big[n] / max(t_base[n], 1e-9), 2)
-        for n in t_base
-        # sub-second baselines are noise; builds are included via the
-        # _build_* entries _run_tier always measures
-        if t_base[n] >= 0.5 and t_big[n] / max(t_base[n], 1e-9) > bound
+        n: (t_base[n][0], t_big[n][0])
+        for n in names
+        if measure.gate_exceeds(t_big[n][0], t_base[n][0], bound)
     }
-    assert not bad, f"worse than {bound}x at {COPIES} copies: {bad}"
+    assert not bad, f"worse than {bound} x max(base, 0.5 s) at {COPIES} copies: {bad}"

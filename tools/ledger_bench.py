@@ -15,7 +15,7 @@ Claims under test (sources/ledger.py):
    on the NON-KEY dimension must scan a strict subset of groups and
    beat the unpruned filter-the-snapshot read.
 
-Method notes (mirrors tools/scale_smoke.py):
+Method notes (mirrors `tools/measure.py scale`):
 - One session; the small tier runs first to warm the JVM.
 - Each measurement is one timed run of an action that materializes its
   result (count() for reads, the commit itself for writes) — parquet

@@ -2,7 +2,7 @@
 item 4): the fixture tiers are too small to catch fits-in-memory
 constants (LSH band widths, IVF sample sizes, basket-size assumptions),
 so this script unions sf0.1 with key-shifted copies into a tier the
-scale smoke (tools/scale_smoke.py) can run the heaviest queries at.
+scale smoke (`tools/measure.py scale`) can run the heaviest queries at.
 
 Copy construction, per copy i in 0..K-1 (copy 0 = the original bytes):
 

@@ -133,7 +133,7 @@ def smoke_gated_paths() -> list[str]:
         REGISTRY,
         _load_all,
     )
-    from scale_smoke import HEAVY
+    from measure import HEAVY
 
     _load_all()
     paths = {os.path.join(_ROOT, "eprints_to_hyku_data_tool_spark", "functions")}
@@ -141,7 +141,7 @@ def smoke_gated_paths() -> list[str]:
         mod = sys.modules[REGISTRY[name].fn.__module__]
         paths.add(mod.__file__)
     paths.add(os.path.join(_ROOT, "tools", "make_scale_tier.py"))
-    paths.add(os.path.join(_ROOT, "tools", "scale_smoke.py"))
+    paths.add(os.path.join(_ROOT, "tools", "measure.py"))
     # The resolution layer (code-review r15): these decide which
     # callable each HEAVY name resolves to — a change there can alter
     # what the smoke measures without touching any gated module.
@@ -241,7 +241,7 @@ def check_smoke_fresh() -> list[str]:
     if stale:
         return [
             "SCALE_SMOKE.json is older than commits touching the code it "
-            f"gates: {stale} — re-run tools/scale_smoke.py and commit"
+            f"gates: {stale} — re-run `tools/measure.py scale` and commit"
         ]
     return []
 
