@@ -37,8 +37,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1 shape) on /root/testdata/sf0.001.
 
     The flagship is resolved through the registry by its rotation-stable
-    suffix (currently ``q10619_groupby_multi_agg``) so a tier rotation cannot
-    silently break this smoke gate (VERDICT r6 item 7).
+    suffix, so a tier rotation cannot silently break this smoke gate.
     """
     tune_session(spark)
     return queries_map()[flagship_name()](spark, "/root/testdata/sf0.001")

@@ -17,12 +17,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Loud-gate notes collected by regressions_vs_previous (rename-map load
-# failures, coverage gaps); surfaced in the printed payload so a broken
-# gate can never masquerade as a clean one.
+# Loud-gate notes collected by regressions_vs_previous (unreadable or
+# mismatched previous bench, coverage gaps); surfaced in the printed
+# payload so a broken gate can never masquerade as a clean one.
 GATE_NOTES: list[str] = []
 
-from eprints_to_hyku_data_tool_spark.plans.registry import REGISTRY
+from eprints_to_hyku_data_tool_spark.plans.registry import REGISTRY, suffix
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 import measure  # noqa: E402
@@ -136,12 +136,6 @@ def main() -> None:
         # CPU_SCALING_r16.json for a CPU-bound tier where cores show).
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
-        # Registry names rotate between rounds (RENAMES_r*.json maps
-        # old -> new per round); a comparator diffing raw name sets
-        # across rounds must apply the newest map first or it reports
-        # the rotation as dropped+new queries (PERF r15 did exactly
-        # that: 50 "dropped" = 50 "newly passing" under rename).
-        "renames_note": "apply RENAMES_r*.json before diffing name sets",
         "n_queries": sum(1 for n in timings if n in REGISTRY),
         # A query that errors must not make the suite look faster:
         # consumers see the failure list explicitly.
@@ -208,11 +202,11 @@ def main() -> None:
                     "full list in BENCH_local.json"
                 )
                 line = json.dumps(printed)
-    # gate_notes is unbounded too (code-review r15): in the round where
-    # many rename maps are unreadable AND the coverage guard fires per
-    # gate invocation, the notes alone can blow the driver's ~2000-char
-    # tail — unparseable payload in exactly the broken-gate round the
-    # notes exist to expose. Same rebind-before-mutate rule as above.
+    # gate_notes is unbounded too (code-review r15): in a round where
+    # the notes pile up across gate invocations, they alone can blow the
+    # driver's ~2000-char tail — unparseable payload in exactly the
+    # broken-gate round the notes exist to expose. Same rebind-before-
+    # mutate rule as above.
     if len(line) > 1900 and printed.get("gate_notes"):
         printed["gate_notes"] = list(printed["gate_notes"])
         full_n = len(printed["gate_notes"])
@@ -398,14 +392,12 @@ def regressions_vs_previous(
 ) -> dict[str, dict]:
     """Compare against the newest BENCH_r*.json in the repo root and
     return {query: {prev, now, ratio}} for every >threshold slowdown.
-    Registry keys renamed across tier rotations are matched to their
-    previous-round names by walking the RENAMES_r*.json chain backwards
-    (each file maps old -> new for its round; the inverses are applied
-    newest-first until a name present in the previous bench appears),
-    plus the round-3 convention that a z-name's round-2 key was the
-    same suffix under q."""
+    Entries match by suffix (``registry.suffix``), which tier rotations
+    keep; a suffix that appears twice in the previous bench is skipped
+    rather than guessed."""
     import glob
     import re
+    from collections import Counter
 
     root = os.path.dirname(os.path.abspath(__file__))
     benches = sorted(
@@ -439,51 +431,18 @@ def regressions_vs_previous(
             )
             return {}
     prev_q = _merge_sidecar(prev, _extract_queries(prev))
-    # new -> old maps, newest round first
-    inverses: list[dict[str, str]] = []
-    for path in sorted(
-        glob.glob(os.path.join(root, "RENAMES_r*.json")),
-        key=lambda p: -int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    ):
-        try:
-            with open(path) as fh:
-                inverses.append({v: k for k, v in json.load(fh).items()})
-        except (OSError, json.JSONDecodeError) as exc:
-            # An unreadable rename map silently collapses the gate to
-            # near-zero coverage (every rotated name misses its lookup)
-            # — be loud and record it so the payload shows the gap
-            # (code-review r14).
-            print(
-                f"BENCH RENAME-MAP UNREADABLE {os.path.basename(path)}: "
-                f"{exc}",
-                file=sys.stderr,
-            )
-            GATE_NOTES.append(
-                f"rename map unreadable: {os.path.basename(path)}"
-            )
-            continue
-
-    def lookup(name: str):
-        cand = name
-        if cand in prev_q:
-            return prev_q[cand]
-        for inv in inverses:
-            cand = inv.get(cand, cand)
-            if cand in prev_q:
-                return prev_q[cand]
-        if cand.startswith("z"):
-            return prev_q.get("q" + cand[1:])
-        return None
+    seen = Counter(map(suffix, prev_q))
+    by_suffix = {suffix(n): t for n, t in prev_q.items() if seen[suffix(n)] == 1}
 
     ratios: dict[str, tuple[float, float, float]] = {}
     for name, now in timings.items():
-        old = lookup(name)
+        old = by_suffix.get(suffix(name))
         if old is None or old <= 0 or now <= 0:
             continue
         ratios[name] = (old, now, now / old)
     # Coverage guard (code-review r14): the fleet-median drift estimate
-    # is only meaningful when most of the suite is comparable. If the
-    # rename chain broke (or the previous bench was tiny), flag the gap
+    # is only meaningful when most of the suite is comparable. If few
+    # suffixes matched (or the previous bench was tiny), flag the gap
     # instead of letting a near-empty ratio set read as a clean bill.
     if prev_q and len(ratios) < max(10, len(prev_q) // 4):
         GATE_NOTES.append(

@@ -17,7 +17,7 @@ checkpoint — the same shared-intermediate move as the co-purchase graph
 Scale accounting: the gram table is data-linear (~8x the text bytes as
 distinct shingle strings) and spills via MEMORY_AND_DISK; on a cluster
 the equivalent is writing it once as a parquet intermediate and fanning
-the gram consumers out from it. bench.py and tools/scale_smoke.py time
+the gram consumers out from it. bench.py and `tools/measure.py scale` time
 the build as an explicit `_build_doc_grams` entry so the consumers pay
 marginals, mirroring the other two shared builds.
 

@@ -194,7 +194,7 @@ def z117228_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X29 — histogram / binning (fixed-width buckets, identical arithmetic)
 # --------------------------------------------------------------------------
 @register(
-    "z12797_histogram",
+    "z12797_fixed_width_histogram",
     oracle="""
     SELECT CAST(LEAST(GREATEST(CAST(FLOOR(value / 25) AS INT), 0), 19) AS INT)
              AS bucket,
@@ -208,7 +208,7 @@ def z117228_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "divergence by construction. One partial-agg shuffle on a 20-value "
     "key; decimal-exact per-bucket sums as in q54.",
 )
-def z12797_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+def z12797_fixed_width_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     bucket = F.least(
         F.greatest(F.floor(F.col("value") / 25).cast("int"), F.lit(0)),

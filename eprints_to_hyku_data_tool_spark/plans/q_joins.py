@@ -457,7 +457,7 @@ def z11768_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X25 — MERGE / upsert semantics (CDC apply) as one declarative plan
 # --------------------------------------------------------------------------
 @register(
-    "z12794_merge_upsert",
+    "z12794_cdc_full_outer_merge",
     oracle="""
     WITH changes AS (
       SELECT o_custkey AS key,
@@ -490,7 +490,7 @@ def z11768_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partition-overwrite writer (exercises all three action branches: "
     "1497/30/3 at sf0.01). Decimal-exact spend sums as in q54.",
 )
-def z12794_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+def z12794_cdc_full_outer_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     changes = (

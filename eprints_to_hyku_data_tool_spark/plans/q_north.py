@@ -298,7 +298,7 @@ def verify_jaccard_candidates(docs: DataFrame, candidates: DataFrame) -> DataFra
     pre-join xxhash64 narrowing (hash each doc's set to int64 ONCE,
     join the narrow arrays) won on MATERIALIZED inputs but regressed
     the live LSH plan 2.6 s -> 4.9 s warm (CONFIRMED by
-    tools/adjudicate.py): `docs` is an unmaterialized shingle subtree
+    `tools/measure.py adjudicate`): `docs` is an unmaterialized shingle subtree
     re-derived per join side, and the added pre-join projection work
     lands on BOTH re-derivations while AQE loses the skinny
     projection it used to broadcast-plan. Computing the intersect

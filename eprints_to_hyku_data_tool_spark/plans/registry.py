@@ -10,81 +10,20 @@ Hash-matching discipline (SURVEY.md §5) enforced by convention here:
   ns-precision in parquet, microseconds in both engines after read);
 - any collected list is sorted before joining to a string.
 
-Naming / driver-window scheme: the driver's correctness gate checks the
-FIRST 50 registered names in sorted order (observed in round 2:
-CORRECTNESS_r02 is exactly the 50-entry sorted prefix). Names sort
-q* < x* < y* < z*, so:
+Naming: every query is registered as ``<tier><nn>_<suffix>``. The
+suffix (the name after the first ``_``) is the query's identity: it is
+unique across the registry and never changes, while the tier prefix
+rotates. The driver's correctness gate checks the FIRST 50 registered
+names in sorted order, and names sort q* < x* < y* < z*, so:
 
-- q??_* / x??_*  — the priority tier (must stay <= 50 names total):
-  whatever most needs a driver row THIS round — changed code and
-  queries that have never been driver-verified.
-- y??_*          — overflow added after the priority window filled;
-  locally oracle-verified like everything else, rotation candidates.
-- z??_*          — queries an earlier round's driver verified GREEN
-  under a former q/x name. They remain registered, bench-timed, and
-  oracle-checked by the local pytest mirror on every run — only their
-  driver slot is ceded.
+- q* / x*  — the driver window (at most 50 names): changed code and the
+  stalest driver rows (tools/rotation_planner.py ranks them).
+- y* / z*  — everything else; registered, bench-timed and oracle-checked
+  by the local pytest mirror on every run.
 
-Round-4 rotation (the big one): all 48 r3-green unchanged q/x names
-ceded their slots (q51..q77 -> z51..z77 keeping suffixes; q01/q18/q19/
-q22 -> z01/z18/z19/z22; x12..x30 -> z81..z98), and the entire y-tier —
-30 queries that had never had a driver row, including all nine r3
-analytics ops — moved into the window under fresh names (y34..y56 ->
-q80..q99, y57..y66 -> x31..x40; see RENAMES_r4.json at the repo root
-for the exact map). The r3 red row (int8 quantize, output schema fixed
-in r4) and the sessionize gap-arithmetic fix kept their q/x names so
-the driver re-checked them; remaining slots went to round-4 additions.
-
-Round-5 rotation: the r4 sweep came back 50/50 green, so all 48
-unchanged window names ceded their slots under a mechanical scheme
-(q## -> z1##, x## -> z2##, suffixes kept; see RENAMES_r5.json). The 8
-r4 overflow queries that never had a driver row (y67..y74 — the
-MassiveText duplicate-n-gram filter, keep-longest canonical, and five
-TPC-H reporting composites) moved into the window as q01..q08.
-q88_pagerank (dangling-mass loop de-actioned this round) and
-x34_heavyhitters (certification scalars folded into one job this
-round) kept their names so the driver re-checked the changed code.
-Remaining slots were filled by round-5 additions (q10+ / x58+).
-
-Round-6 rotation: the r5 sweep came back 50/50 green again, so the 47
-unchanged window names ceded their slots (q## -> z3##, x34 -> z434,
-suffixes kept; see RENAMES_r6.json). The 16 r5 overflow queries that
-never had a driver row (y75..y90) moved into the window as q50..q65;
-z195_triangle_count re-entered as q66 (shared-graph refactor), and
-q26_bfs_hops / q39_histogram (ntile-mapping fix) / q88_pagerank
-(loop reshaped) kept their names — every window q-name this round has
-CHANGED code or a first driver check. That left 20 q-names, so the
-remaining 30 window slots fell to the 30 lowest-sorting z-names
-(z01..z190 region) — all green in earlier rounds, re-verified for
-freshness at zero cost (the driver checks the first 50 sorted names
-regardless).
-
-Round-7 rotation (stalest-first by construction): the r6 sweep came
-back 50/50 green, so the 20 r6 window q-names ceded their slots
-(q## -> z5##, suffixes kept; see RENAMES_r7.json), and the window was
-refilled by tools/rotation_planner.py — a lineage replay of every
-RENAMES_r*.json against every CORRECTNESS_r*.json that ranks all
-registered names by their freshest green driver round. The 50 stalest
-(the 30 round-2-era names z20..z50 whose rows predate the round-3
-testdata regeneration, plus the 20 stalest round-3 names z19..z67)
-entered the window as q-names with suffixes kept (z## -> q##). After
-this round no registered query's driver row predates the current
-fixtures; tests/test_rotation.py bounds staleness mechanically from
-the artifacts.
-
-Round-8 rotation (changed-code first): the r7 sweep came back 50/50
-green, so the 50 r7 window names ceded their slots (q## -> z6##,
-suffixes kept; see RENAMES_r8.json). The window was refilled
-changed-code first: the seven names whose kernels changed AFTER the r7
-window was fixed (q974_rplsh_neardup — its name AT round 8 — with the
-16x8 banding fix; the six
-graph-family names q526/q551/q564/q565/q566/q588 on the rebuilt
-co-purchase graph), then the 26 round-3-era names at the 4-round
-staleness bound (q68..q98 region), then the 18 stalest round-4 names
-(q191..q240 region). Staleness is now measured against
-rotation_planner.reference_round() — the newest completed round as of
-the last rotation or sweep — so a green driver sweep can no longer turn
-the suite red at the round boundary (VERDICT r7 "What's wrong" #1).
+A rotation is a prefix-only rename: suffixes are kept, so nothing that
+keys on the suffix (freshness, bench regressions, the flagship lookup)
+needs the old names.
 
 tests/test_registry.py asserts the priority tier stays within the window
 and that every SURVEY §2 component maps to a live registered name.
@@ -109,17 +48,20 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
+def suffix(name: str) -> str:
+    """A query's rotation-stable identity: its name after the first ``_``."""
+    return name.partition("_")[2]
+
+
 def register(name: str, oracle: str | None, doc: str = ""):
     """Decorator: add a (query, oracle) pair to the global registry."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
-        if name in REGISTRY:
-            # Silent overwrite would make the shadowed query vanish from
-            # queries()/oracle_sql() and the parity suite — its
-            # correctness never checked again, the gate green vacuously.
-            # The mechanical tier rotations rename ~100 queries a round;
-            # a collision must be loud (code-review r13).
-            raise ValueError(f"duplicate query registration: {name}")
+        # A silent overwrite would make the shadowed query vanish from
+        # queries()/oracle_sql() and the parity suite; two names sharing
+        # a suffix would share one identity (freshness, bench history).
+        if any(suffix(n) == suffix(name) for n in REGISTRY):
+            raise ValueError(f"duplicate query registration: suffix of {name}")
         REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc)
         return fn
 
@@ -162,17 +104,14 @@ def _load_all() -> None:
 
 
 # The flagship (SURVEY §2 Q19, the smoke-gate query run by entry()) is
-# resolved by SUFFIX, not full name: every tier rotation since round 3 has
-# renamed queries mechanically as <tier><nn>_<suffix> with the suffix kept,
-# so the suffix is the rotation-stable identity (VERDICT r6 item 7 — a
-# hardcoded full name broke silently whenever the flagship rotated).
+# resolved by suffix, so a tier rotation cannot break entry().
 FLAGSHIP_SUFFIX = "groupby_multi_agg"
 
 
 def flagship_name() -> str:
     """The current registered name of the flagship query (§2 Q19)."""
     _load_all()
-    matches = [n for n in REGISTRY if n.endswith("_" + FLAGSHIP_SUFFIX)]
+    matches = [n for n in REGISTRY if suffix(n) == FLAGSHIP_SUFFIX]
     if len(matches) != 1:
         raise LookupError(
             f"flagship suffix {FLAGSHIP_SUFFIX!r} must match exactly one "

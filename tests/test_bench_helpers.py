@@ -233,29 +233,26 @@ def test_warm_rerun_no_flags_is_a_noop(monkeypatch):
     assert not called and timings["_build_neardup_pairs"] == 7.9
 
 
-def test_regression_gate_is_loud_when_rename_map_unreadable(
-    tmp_path, monkeypatch
-):
-    """code-review r14: an unreadable RENAMES_r*.json used to be silently
-    skipped, collapsing rename-chain lookups to near-zero coverage with
-    an empty-regressions clean bill. The gate must record BOTH the load
-    failure and the coverage collapse in GATE_NOTES (surfaced in the
-    printed payload)."""
+def test_regression_gate_matches_rotated_names_by_suffix(tmp_path, monkeypatch):
+    """A rotation changes every prefix and no suffix: each entry still
+    finds its previous timing, with no coverage note. A suffix that the
+    previous bench holds twice is skipped, not guessed."""
     import bench
 
     monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    prev = {f"z{i:02d}_q{i:02d}": 1.0 for i in range(40)}
+    prev.update({"q90_dup": 1.0, "z90_dup": 1.0})
     (tmp_path / "BENCH_r01.json").write_text(
-        json.dumps({"sf": 0.1, "queries": {f"z{i:02d}_q": 1.0 for i in range(40)}})
+        json.dumps({"sf": 0.1, "queries": prev})
     )
-    (tmp_path / "RENAMES_r2.json").write_text("{corrupt json")
+    now = {f"q{i + 100}_q{i:02d}": 1.0 for i in range(40)}
+    now["x77_dup"] = 1.0
     bench.GATE_NOTES.clear()
     try:
-        out = bench.regressions_vs_previous(
-            {f"x{i:02d}_new": 1.0 for i in range(40)}, 0.1, quiet=True
-        )
-        assert out == {}
-        assert any("unreadable" in n for n in bench.GATE_NOTES), bench.GATE_NOTES
-        assert any("compared only" in n for n in bench.GATE_NOTES), bench.GATE_NOTES
+        # threshold 0 reports every matched entry
+        out = bench.regressions_vs_previous(now, 0.1, threshold=0, quiet=True)
+        assert sorted(out) == sorted(n for n in now if n != "x77_dup")
+        assert bench.GATE_NOTES == []
     finally:
         bench.GATE_NOTES.clear()
 
@@ -266,7 +263,7 @@ def test_regression_gate_quiet_when_coverage_full(tmp_path, monkeypatch):
     import bench
 
     monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    names = {f"z{i:02d}_q": 1.0 for i in range(40)}
+    names = {f"z{i:02d}_q{i:02d}": 1.0 for i in range(40)}
     (tmp_path / "BENCH_r01.json").write_text(
         json.dumps({"sf": 0.1, "queries": names})
     )

@@ -148,76 +148,31 @@ def test_every_section2_component_registered():
 def test_every_query_has_unique_registration():
     registry._load_all()
     names = list(registry.REGISTRY)
-    assert len(names) == len(set(names))
+    assert len({registry.suffix(n) for n in names}) == len(names)
     # every oracle-paired entry has non-empty SQL
     for name, spec in registry.REGISTRY.items():
         if spec.oracle is not None:
             assert "SELECT" in spec.oracle.upper(), name
 
 
-# --------------------------------------------------------------------------
-# Rotation bookkeeping (VERDICT r4 item 8): the z-tier claims "an earlier
-# round's driver verified this query green under a former name". That claim
-# must be mechanically checkable, or a rename could launder an unverified
-# query into the verified tier.
-# --------------------------------------------------------------------------
-import glob
-import json
-import os
-import re
+def test_duplicate_suffix_fails_loudly():
+    """The suffix is a query's identity: a new prefix on a registered
+    suffix is a second query claiming the first one's history."""
+    registry._load_all()
+    existing = registry.flagship_name()
+    with pytest.raises(ValueError, match="groupby_multi_agg"):
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        @registry.register("y999_" + registry.suffix(existing), oracle="SELECT 1")
+        def clone(spark, sf_dir):  # pragma: no cover - never runs
+            raise AssertionError
 
-
-def _rename_files() -> list[str]:
-    return sorted(
-        glob.glob(os.path.join(_ROOT, "RENAMES_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-
-
-def _green_driver_names() -> set[str]:
-    """Names with a fully-green row (rows+schema+hash) in any round's
-    driver CORRECTNESS artifact."""
-    green: set[str] = set()
-    for f in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
-        for name, row in json.load(open(f)).items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match", True)
-                and row.get("hash_match", True)
-            ):
-                green.add(name)
-    return green
-
-
-def test_rename_maps_are_clean():
-    """Each RENAMES_r*.json must be a clean, order-independent old->new
-    map: no two old names collapsing onto one new name, no self-renames,
-    and no name appearing as BOTH a key and a value in the same file
-    (which would make the map's effect depend on application order).
-    Cross-ROUND name reuse is legitimate — suffix-kept tier rotations can
-    return a query to a previously-held name (q19 -> z19 in r4, back to
-    q19 in r7); the composed new->old walk still terminates because each
-    round's inverse applies at most once, newest-first."""
-    for f in _rename_files():
-        m = json.load(open(f))
-        assert len(set(m.values())) == len(m), f"{f}: duplicate targets"
-        assert all(k != v for k, v in m.items()), f"{f}: self-rename"
-        overlap = set(m) & set(m.values())
-        assert not overlap, f"{f}: order-dependent chained renames {overlap}"
+    assert "y999_groupby_multi_agg" not in registry.REGISTRY
 
 
 def test_every_z_name_has_green_driver_ancestor():
-    """Every z-tier query must trace back through the RENAMES chain to a
-    round in which the driver verified it fully green UNDER THE NAME IT
-    CARRIED THAT ROUND. A z-name that cannot is an unverified query
-    hiding in the verified tier and must stay in the q/x window instead.
-    The per-round identity replay (tools/rotation_planner.py) is exact
-    even when a name was reused by different queries in different rounds
-    — each round's green set is only consulted for the name this query
-    carried in that round."""
+    """Every z-tier query must have a fully green driver row under its
+    suffix in some round. A z-name without one is an unverified query
+    hiding in the verified tier and must stay in the q/x window instead."""
     from rotation_planner import freshness  # tools/ on sys.path (conftest)
 
     registry._load_all()

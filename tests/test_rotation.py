@@ -114,16 +114,10 @@ def test_flagship_duplicate_suffix_is_loud(monkeypatch):
         registry.flagship_name()
 
 
-def _artifact_repo(tmp_path, renames_rounds, correctness_rounds):
-    import json
-
-    for r in renames_rounds:
-        (tmp_path / f"RENAMES_r{r}.json").write_text(json.dumps({}))
-    for r in correctness_rounds:
-        (tmp_path / f"CORRECTNESS_r0{r}.json").write_text(
-            json.dumps({"q01_x": {"rows_match": True, "hash_match": True}})
-        )
-    return str(tmp_path)
+def _sweep(tmp_path, r):
+    (tmp_path / f"CORRECTNESS_r{r:02d}.json").write_text(
+        '{"q01_x": {"rows_match": true, "hash_match": true}}'
+    )
 
 
 def test_reference_round_boundary_semantics(tmp_path, monkeypatch):
@@ -135,30 +129,27 @@ def test_reference_round_boundary_semantics(tmp_path, monkeypatch):
     the overdue rotation)."""
     import rotation_planner as rp
 
-    # Mid-round 8: RENAMES_r8 exists, sweep not yet landed -> reference 7.
-    monkeypatch.setattr(
-        rp, "_ROOT", _artifact_repo(tmp_path, range(3, 9), range(1, 8))
-    )
+    monkeypatch.setattr(rp, "_ROOT", str(tmp_path))
+
+    # Mid-round 8: the round-8 rotation is recorded, sweep not yet
+    # landed -> reference 7.
+    monkeypatch.setattr(rp, "LAST_ROTATION_ROUND", 8)
+    for r in range(1, 8):
+        _sweep(tmp_path, r)
     assert rp.reference_round() == 7
 
     # End of round 8: CORRECTNESS_r08 lands -> reference STAYS 7 (the
     # boundary case that turned the r7 suite red under max(correctness)).
-    (tmp_path / "CORRECTNESS_r08.json").write_text(
-        '{"q01_x": {"rows_match": true, "hash_match": true}}'
-    )
+    _sweep(tmp_path, 8)
     assert rp.reference_round() == 7
 
     # Round 9 rotation lands -> reference advances to 8.
-    (tmp_path / "RENAMES_r9.json").write_text("{}")
+    monkeypatch.setattr(rp, "LAST_ROTATION_ROUND", 9)
     assert rp.reference_round() == 8
 
     # Round 10's sweep lands WITHOUT a round-10 rotation -> the reference
     # still advances (to 10 - 1 = 9), so overdue names eventually trip
     # the staleness tests even if rotations stop happening.
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        '{"q01_x": {"rows_match": true, "hash_match": true}}'
-    )
-    (tmp_path / "CORRECTNESS_r10.json").write_text(
-        '{"q01_x": {"rows_match": true, "hash_match": true}}'
-    )
+    _sweep(tmp_path, 9)
+    _sweep(tmp_path, 10)
     assert rp.reference_round() == 9

@@ -202,28 +202,6 @@ def test_smoke_gate_covers_resolution_layer():
     assert "__spark_entry__.py" in paths
 
 
-def test_rotation_planner_rejects_non_injective_map(monkeypatch, tmp_path):
-    """code-review r15: a corrupt rename map sending two old names to
-    one new name would silently graft the dropped lineage's green
-    history onto the survivor during the freshness replay."""
-    import json as _json
-
-    import rotation_planner as rp
-
-    bad = tmp_path / "RENAMES_r99.json"
-    bad.write_text(_json.dumps({"a_one": "z_same", "b_two": "z_same"}))
-    import glob as _glob
-
-    real_glob = _glob.glob
-    monkeypatch.setattr(
-        rp.glob,
-        "glob",
-        lambda pat: [str(bad)] if "RENAMES" in pat else real_glob(pat),
-    )
-    with pytest.raises(ValueError, match="not injective"):
-        rp.load_rename_inverses()
-
-
 def test_scale_smoke_requires_matching_tier_manifest(tmp_path):
     """code-review r15: the scale gate's linear bound is 2x --copies, so
     a stale tier built with fewer copies made the gate vacuous.

@@ -1,20 +1,17 @@
-"""Stalest-first rotation planner (VERDICT r6 item 6).
+"""Stalest-first rotation planner.
 
 The driver's correctness gate checks the FIRST 50 sorted names from
-``__spark_entry__.queries()`` each round. Earlier rotations picked window
-occupants by whatever happened to sort low, which re-verified already-fresh
-names while round-2-era rows went stale. This planner makes the choice
-deliberate: it replays every ``RENAMES_r*.json`` against every
-``CORRECTNESS_r*.json`` to compute, per currently-registered name, the
-freshest round in which the driver saw it green (under its then-current
-identity), then emits the 50 STALEST names — the ones the next rotation
-should pull into the q/x window.
+``__spark_entry__.queries()`` each round. This planner ranks every
+registered name by the freshest round in which the driver saw it green
+and emits the 50 STALEST names — the ones the next rotation should pull
+into the q/x window.
 
-Identity replay: ``RENAMES_rK.json`` maps the name a query carried in round
-K-1 to the name it carries from round K on, so a query's identity *at* round
-K is its current name with the inverses of RENAMES_r{K+1}.. applied
-newest-first. A name is "fresh at round K" when that identity has a fully
-green (rows+schema+hash) row in ``CORRECTNESS_r0K.json``.
+A query's identity is its suffix (``registry.suffix``): rotations change
+only the tier prefix, so a row in ``CORRECTNESS_r0K.json`` belongs to the
+registered query with the same suffix. A name is "fresh at round K" when
+its suffix has a fully green (rows+schema+hash) row in that file.
+
+A rotation is recorded by setting ``LAST_ROTATION_ROUND`` to its round.
 
 Run:  python tools/rotation_planner.py [--window 50]
 Used by tests/test_rotation.py to assert post-rotation freshness bounds.
@@ -27,43 +24,35 @@ import glob
 import json
 import os
 import re
+import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+
+from eprints_to_hyku_data_tool_spark.plans import registry  # noqa: E402
+
+# The round of the newest tier rotation.
+LAST_ROTATION_ROUND = 15
+
+# Before two queries that shared a suffix were given distinct ones, their
+# driver rows carried the old shared suffix. These six rows belong to the
+# renamed (older) query; every other row with that suffix is the newer one's.
+HISTORICAL_ROWS = {
+    "x25_merge_upsert": "cdc_full_outer_merge",
+    "q94_merge_upsert": "cdc_full_outer_merge",
+    "q794_merge_upsert": "cdc_full_outer_merge",
+    "x29_histogram": "fixed_width_histogram",
+    "q97_histogram": "fixed_width_histogram",
+    "q797_histogram": "fixed_width_histogram",
+}
 
 
 def _round_of(path: str) -> int:
     return int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
 
 
-def load_rename_inverses() -> dict[int, dict[str, str]]:
-    """{round K: {new_name: old_name}} for every RENAMES_rK.json.
-
-    Loud on a non-injective map (code-review r15): if a corrupt rename
-    file ever mapped two old names onto one new name, the ``{v: k}``
-    inversion would silently keep whichever entry iterates last —
-    grafting the dropped lineage's green history onto the survivor, so
-    the stalest-first replay would credit freshness a query never
-    earned. All 15 maps on disk are injective today; this keeps any
-    future one that isn't from corrupting the replay silently."""
-    out: dict[int, dict[str, str]] = {}
-    for f in glob.glob(os.path.join(_ROOT, "RENAMES_r*.json")):
-        m = json.load(open(f))
-        inv = {v: k for k, v in m.items()}
-        if len(inv) != len(m):
-            from collections import Counter
-
-            dupes = [v for v, c in Counter(m.values()).items() if c > 1]
-            raise ValueError(
-                f"{os.path.basename(f)} is not injective: new names "
-                f"{sorted(dupes)} each claim multiple old identities — "
-                "the freshness replay cannot attribute their history"
-            )
-        out[_round_of(f)] = inv
-    return out
-
-
 def load_green_rows() -> dict[int, set[str]]:
-    """{round K: set of fully-green names in CORRECTNESS_r0K.json}."""
+    """{round K: suffixes with a fully green row in CORRECTNESS_r0K.json}."""
     out: dict[int, set[str]] = {}
     for f in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
         green = set()
@@ -83,57 +72,38 @@ def load_green_rows() -> dict[int, set[str]]:
                 and row.get("schema_match", False)
                 and row.get("hash_match", False)
             ):
-                green.add(name)
+                green.add(HISTORICAL_ROWS.get(name, registry.suffix(name)))
         out[_round_of(f)] = green
     return out
 
 
-def identity_at_round(
-    name: str, k: int, inverses: dict[int, dict[str, str]]
-) -> str:
-    """The name this query carried in round k (undo renames newer than k)."""
-    cand = name
-    for rnd in sorted(inverses, reverse=True):
-        if rnd > k:
-            cand = inverses[rnd].get(cand, cand)
-    return cand
+def current_round() -> int:
+    """The newest round: the last rotation or the last driver sweep."""
+    sweeps = glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))
+    return max([LAST_ROTATION_ROUND, *map(_round_of, sweeps)])
 
 
 def reference_round() -> int:
-    """The staleness reference point: the newest COMPLETED round as of the
-    most recent rotation or driver sweep.
+    """The staleness reference point: the newest COMPLETED round.
 
-    A rotation for round N (RENAMES_rN.json) is planned against the
-    artifacts of rounds <= N-1, and a driver sweep for round N
-    (CORRECTNESS_r0N.json) likewise closes round N so the next rotation is
-    N+1's job. Measuring staleness against ``max(correctness rounds)``
-    directly made the suite go red the moment a green sweep landed — before
-    the next rotation could possibly exist (the round-7 boundary bug).
-    Anchoring at ``current_round - 1`` keeps the invariant checkable at
-    every commit: it only trips when a rotation (or a sweep without one)
-    actually left a due name outside the window.
+    A rotation for round N is planned against the artifacts of rounds
+    <= N-1, and a driver sweep for round N (CORRECTNESS_r0N.json) closes
+    round N so the next rotation is N+1's job. Measuring staleness against
+    the newest sweep directly made the suite go red the moment a green
+    sweep landed, before the next rotation could exist. Anchoring at
+    ``current_round() - 1`` only trips when a rotation (or a sweep
+    without one) actually left a due name outside the window.
     """
-    rename_rounds = [
-        _round_of(f) for f in glob.glob(os.path.join(_ROOT, "RENAMES_r*.json"))
-    ]
-    green_rounds = list(load_green_rows())
-    cur = max(max(rename_rounds, default=1), max(green_rounds, default=1))
-    return cur - 1
+    return current_round() - 1
 
 
 def freshness(names: list[str]) -> dict[str, int]:
     """{current name: freshest round with a green driver row; 0 = never}."""
-    inverses = load_rename_inverses()
-    greens = load_green_rows()
-    out: dict[str, int] = {}
-    for name in names:
-        best = 0
-        for k in sorted(greens, reverse=True):
-            if identity_at_round(name, k, inverses) in greens[k]:
-                best = k
-                break
-        out[name] = best
-    return out
+    greens = sorted(load_green_rows().items(), reverse=True)
+    return {
+        name: next((k for k, g in greens if registry.suffix(name) in g), 0)
+        for name in names
+    }
 
 
 def stalest(names: list[str], window: int = 50) -> list[tuple[str, int]]:
@@ -147,11 +117,6 @@ def stalest(names: list[str], window: int = 50) -> list[tuple[str, int]]:
 
 
 def registered_names() -> list[str]:
-    import sys
-
-    sys.path.insert(0, _ROOT)
-    from eprints_to_hyku_data_tool_spark.plans import registry
-
     registry._load_all()
     return sorted(registry.REGISTRY)
 

@@ -12,12 +12,12 @@ ends with:
 Checks, in order:
 
 1. **Artifacts tracked and clean** — every BENCH_r*.json,
-   CORRECTNESS_r*.json, RENAMES_r*.json, SCALE_SMOKE.json and the
+   CORRECTNESS_r*.json, SCALE_SMOKE.json and the
    BENCH_local.json sidecar is committed (neither untracked nor
    modified in the working tree).
 2. **Docs mention the current round** — SURVEY.md has a round-N delta
-   section and BASELINE.md quotes a round >= N-1 table, where N is the
-   newest round seen across RENAMES/CORRECTNESS artifacts.
+   section and BASELINE.md quotes a round >= N-1 table, where N is
+   rotation_planner.current_round().
 3. **Scale-smoke freshness** — SCALE_SMOKE.json's last commit is no
    older than the last commit touching any module that defines a HEAVY
    smoke query or the shared `functions/` kernels it times (the r7
@@ -31,19 +31,18 @@ Exit code 0 = close is clean; 1 = violations printed.
 from __future__ import annotations
 
 import argparse
-import glob
 import os
 import re
 import subprocess
 import sys
 
+from rotation_planner import current_round
+
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
 
 ARTIFACT_GLOBS = [
     "BENCH_r*.json",
     "CORRECTNESS_r*.json",
-    "RENAMES_r*.json",
     "SCALE_SMOKE.json",
     "BENCH_local.json",
     # Same committed-evidence class as the smoke (r12 additions):
@@ -56,16 +55,6 @@ def _git(*args: str) -> str:
     return subprocess.run(
         ["git", *args], cwd=_ROOT, capture_output=True, text=True, check=True
     ).stdout
-
-
-def current_round() -> int:
-    rounds = []
-    for pat in ("RENAMES_r*.json", "CORRECTNESS_r*.json"):
-        for f in glob.glob(os.path.join(_ROOT, pat)):
-            m = re.search(r"r0?(\d+)", os.path.basename(f))
-            if m:  # tolerate stray non-round-stamped filenames
-                rounds.append(int(m.group(1)))
-    return max(rounds)
 
 
 def check_artifacts_tracked() -> list[str]:
